@@ -21,6 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    in the same window, so a median does not help — spreading a
   *    query's samples minutes apart and taking the min does. Min is
   *    the right estimator here because the noise is strictly additive.
+  *  - a query that throws in any timed pass is listed under `failed`
+  *    and charged the timed passes' whole wall time ([[summarize]]),
+  *    so a failure can never lower the total;
   *  - `clearCache()` between runs drops the `.persist()`ed subtrees the
   *    near-dup/ANN plans use, so every run pays its own cache build and
   *    no query's cache leaks into another's measurement;
@@ -42,55 +45,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r12: take the serialized one-file-per-map-task shuffle writer
-      // at every partition count. The bypass-merge writer (the default
-      // below 200 reduce partitions when there is no map-side
-      // aggregation) opens one file PER REDUCE PARTITION per map task
-      // and then concatenates them — R file creates + an NIO
-      // map/unmap/copy + R deletes per task, which thread dumps showed
-      // dominating task runtime at bench scale (measured on the
-      // slowest-30 subset: 67.5 → 54.3 s, every query improved). At
-      // production partition counts (> 200) the bypass writer never
-      // engages, so this also makes the small-scale code path the SAME
-      // one a cluster run takes — not a local-only tuning.
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2)
-      // r12: size the codegen class cache to the declared surface.
-      // Spark's default caches 100 compiled classes; the 302-query
-      // suite generates ~2,900 codegen stages per pass, so every pass
-      // evicted and re-compiled (janino, driver-side, serial) every
-      // stage — silently defeating the untimed warmup pass whose
-      // documented purpose is exactly to pre-compile codegen stages.
-      // 10,000 entries covers the surface (a few KB per compiled
-      // class); measured on the slowest-30 subset: 54.3 → 34.3 s.
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      // r13: floor AQE's partition coalescing at 64 KB instead of the
-      // 1 MB default. With parallelism-first coalescing (the default),
-      // the target partition size is max(stageBytes/defaultParallelism,
-      // minPartitionSize) — so the 1 MB floor collapses every exchange
-      // carrying < ~1 MB/core to ONE partition and serializes the whole
-      // downstream stage (window/agg/join) while 31 cores idle. At 64 KB
-      // the floor binds only below ~2 MB total, where task overhead is
-      // microseconds. At production volumes stageBytes/parallelism is
-      // MBs+, the floor never engages and plans are unchanged — this is
-      // not a local-only tuning, it is "prefer idle cores over the
-      // size floor for byte-tiny exchanges". Measured on the slowest-90
-      // subset: 81.5 → 60.2 s (16k: 66.0, 128k: 73.2); worst per-query
-      // regression +0.06 s (noise). Unlike per-query pinned
-      // repartition(n, key) this keeps AQE's skew-split in play.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    // Optional config overrides for A/B perf experiments
-    // ("k=v;k=v"); the driver never sets this, so its runs measure
-    // the declared defaults.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Sessions.build(cpus.toInt, confOverrides: _*)
     spark.sparkContext.setLogLevel("WARN")
     // ADVICE r12: codegen.cache.maxEntries is a STATIC conf — builder
     // configs are silently ignored when getOrCreate finds an existing
@@ -111,47 +66,26 @@ object Bench {
     // now verifiably happens INSIDE this bench invocation.
     graft.sources.Landing.reset(sfDir)
 
-    def runOnce(fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val elapsed =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      spark.catalog.clearCache()
-      elapsed
-    }
+    def runOnce(fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      try timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      finally spark.catalog.clearCache()
 
     // Untimed warmup: JIT-compiles codegen stages and caches parquet
     // footers so the timed passes measure the plans, not JVM startup.
-    // Optional subset (comma-separated names) for targeted perf work;
-    // the driver never sets this, so its runs cover every query.
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(names) =>
-        val want = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        SparkEntry.queries.filter { case (n, _) => want(n) }
-      case None => SparkEntry.queries
-    }
-
-    // Fixed name order: deterministic, comparable across rounds.
-    val ordered = selected.toSeq.sortBy(_._1)
-
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1")
-      ordered.foreach { case (_, fn) => runOnce(fn) }
+      selected.foreach { case (_, fn) => runOnce(fn) }
 
     // N full passes over the suite (not N back-to-back repeats of each
     // query): each query's samples are separated by a whole pass, so a
     // host-contention window cannot cover all of them.
+    val t0 = System.nanoTime()
     val passes = (1 to nRuns).map { _ =>
-      ordered.map { case (name, fn) => name -> runOnce(fn) }
+      selected.map { case (name, fn) => name -> runOnce(fn) }
     }
-    val results = ordered.map { case (name, _) =>
-      val ok = passes.map(_.toMap.apply(name)).filter(_ >= 0)
-      name -> (if (ok.nonEmpty) ok.min else -1.0)
-    }
+    val (results, failed, total) = summarize(passes, (System.nanoTime() - t0) / 1e9)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    def names(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     // First-land seconds per artifact (paid once, during warmup, after
     // the reset above) — disclosed so artifact-backed queries' timed
     // read-only numbers cannot be mistaken for their pipeline costs.
@@ -161,7 +95,7 @@ object Bench {
         .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"landings":$landings,"sf":"$sfDir","runs":$nRuns,"estimator":"min-of-passes","materialize":"noop"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"landings":$landings,"failed":${names(failed.keys.toSeq.sorted)},"sf":"$sfDir","runs":$nRuns,"estimator":"min-of-passes","materialize":"noop"}"""
     println(json)
     // The repo record covers the FULL surface only — a targeted
     // SPARK_GRAFT_QUERIES subset run must not clobber it. An explicit
@@ -188,9 +122,54 @@ object Bench {
     // Compact summary as the very last stdout line (post-stop so no
     // shutdown logging can follow it on stdout): fits the driver's
     // 2000-char tail capture with room to spare.
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
+    val slowest = results.filterNot(r => failed.contains(r._1)).sortBy(-_._2).take(15)
       .map { case (k, v) => f""""$k":${v}%.3f""" }.mkString("{", ",", "}")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest 15 of ${results.size}; full map in ${benchOut.getOrElse("stdout only (unsaved subset run)")}","landings":$landings,"sf":"$sfDir","runs":$nRuns,"estimator":"min-of-passes","materialize":"noop"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest 15 of ${results.size}; full map in ${benchOut.getOrElse("stdout only (unsaved subset run)")}","landings":$landings,"failed":${names(failed.keys.toSeq.sorted.take(20))},"n_failed":${failed.size},"sf":"$sfDir","runs":$nRuns,"estimator":"min-of-passes","materialize":"noop"}""")
+  }
+
+  /** The declared queries in name order (deterministic, comparable
+    * across rounds), or the optional SPARK_GRAFT_QUERIES subset
+    * (comma-separated names) for targeted work; left unset, a run
+    * covers every query. */
+  private[graft] def selected: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val want = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
+    SparkEntry.queries.toSeq.filter { case (n, _) => want.forall(_(n)) }.sortBy(_._1)
+  }
+
+  /** Optional config overrides for A/B perf experiments
+    * (SPARK_GRAFT_CONF="k=v;k=v"); left unset, a run measures the
+    * declared defaults. */
+  private[graft] def confOverrides: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+
+  /** First line of a throwable's message (its class name if it has none). */
+  private[graft] def firstLine(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.find(_.trim.nonEmpty))
+      .getOrElse(e.getClass.getName)
+
+  /** Seconds `body` took, or its first error line if it threw. */
+  private[graft] def timed(body: => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(firstLine(e)) }
+  }
+
+  /** Per-query seconds (min over passes, name order kept), the queries
+    * that threw in any pass (name → first error line) and the total. A
+    * query that threw is charged at least `wallS`, the wall time of
+    * all timed passes — the perfbench `charged` rule — so a query that
+    * starts to throw can never make the total smaller. */
+  private[graft] def summarize(passes: Seq[Seq[(String, Either[String, Double])]],
+      wallS: Double): (Seq[(String, Double)], Map[String, String], Double) = {
+    val samples = passes.flatten
+    val failed = samples.collect { case (n, Left(err)) => n -> err }.reverse.toMap
+    val seconds = samples.map(_._1).distinct.map { n =>
+      val ok = samples.collect { case (`n`, Right(s)) => s }
+      val best = if (ok.isEmpty) 0.0 else ok.min
+      n -> (if (failed.contains(n)) math.max(best, wallS) else best)
+    }
+    (seconds, failed, seconds.map(_._2).sum)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -72,20 +72,7 @@ object BenchStream {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // serialized shuffle writer at every partition count (see
-      // Bench.scala; never engages at > 200 partitions)
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2)
-      // codegen class cache sized to the declared surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      // r13: see Bench.scala — parallelism floor for byte-tiny
-      // exchanges; never binds at production volumes.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
+    val spark = Sessions.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

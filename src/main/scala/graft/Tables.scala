@@ -54,6 +54,10 @@ object Tables {
     * [[memo]] callers resolve dependencies BEFORE calling it. */
   private def memo(spark: SparkSession, key: String, stampPath: String)(
       build: => DataFrame): DataFrame = {
+    // Every query and landing reads its inputs through here, so this
+    // is the one point that also equips sessions built outside
+    // graft.Sessions with the native functions (a no-op once present).
+    graft.functions.GraftFunctions.register(spark)
     // Opportunistic sweep: entries of STOPPED sessions pin the session
     // and its plans forever in a long-lived JVM (one session per spec
     // under sbt). A handful of reference compares per call, bounded by
@@ -124,7 +128,6 @@ object Tables {
     * reference's landed data. Views are lazy — Catalyst still prunes
     * and pushes down through them. */
   def createViews(spark: SparkSession, sfDir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
       .foreach(t => table(spark, sfDir, t).createOrReplaceTempView(t))

@@ -1,39 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (scripts/check_oracle.py), and
+  * failed.json (query → first error line; `{}` when every query ran). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // serialized shuffle writer at every partition count (see
-      // Bench.scala — the bypass writer's R-files-per-map-task churn
-      // dominates small-scale task runtime; never engages at > 200
-      // partitions, so production behavior is unchanged)
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2)
-      // codegen class cache sized to the declared surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      // r13: see Bench.scala — parallelism floor for byte-tiny
-      // exchanges; never binds at production volumes.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .getOrCreate()
+    val spark = Sessions.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{ByteType, FloatType, IntegerType, ShortType}
-    // Optional subset (comma-separated names) for fast local iteration,
-    // mirroring Bench's SPARK_GRAFT_QUERIES; the driver never sets it.
-    val wanted = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => wanted.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    Bench.selected.foreach { case (name, fn) =>
       try {
         val out = fn(spark, sfDir)
         // Width-normalize the dump so the DuckDB compare sees the same
@@ -48,23 +28,16 @@ object Verify {
         normalized.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = Bench.firstLine(e)
       } finally spark.catalog.clearCache() // drop per-query persisted subtrees
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control char a builder-authored SQL text
+    // may hold — one bad escape would make json.load of the file fail
+    // and silently zero the correctness check.
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("oracle_sql.json" -> SparkEntry.oracleSql, "failed.json" -> failed).foreach {
+      case (file, m) => json.writeValue(new java.io.File(s"$outDir/$file"), m.asJava)
+    }
     spark.stop()
   }
 }

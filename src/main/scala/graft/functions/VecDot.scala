@@ -77,49 +77,41 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native expressions; idempotent, so query
-  * entry points can call it unconditionally on their session. */
+/** graft's native expressions: ONE table of (name, expression class,
+  * builder) that both [[register]] and `plans.GraftExtensions` read. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children.head, children(1)))
+  import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+  import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+
+  private val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], c => VecDot(c(0), c(1))),
+    ("word_shingles", classOf[WordShingles], c => WordShingles(c(0), c(1))),
+    ("minhash8", classOf[MinHash8], c => MinHash8(c(0), c(1))),
+    ("shingle_minmax_md5", classOf[ShingleMinMaxMd5], c => ShingleMinMaxMd5(c(0), c(1))),
+    ("zorder16", classOf[ZOrderKey], c => ZOrderKey(c(0), c(1))),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
     // runtime-filter rewrite but does not expose them in the public
     // registry; surface them for the engine's incremental-dedup fast
     // path (Quality.qBloomDedup). Same builder contract as built-ins.
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1), children(2)).toAggregateExpression())
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingle_minmax_md5"),
-      new ExpressionInfo(classOf[ShingleMinMaxMd5].getName, "shingle_minmax_md5"),
-      (children: Seq[Expression]) => ShingleMinMaxMd5(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => WordShingles(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "minhash8"),
-      (children: Seq[Expression]) => MinHash8(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("zorder16"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "zorder16"),
-      (children: Seq[Expression]) => ZOrderKey(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1)))
+    ("bloom_filter_agg", classOf[BloomFilterAggregate],
+      c => new BloomFilterAggregate(c(0), c(1), c(2)).toAggregateExpression()),
+    ("might_contain", classOf[BloomFilterMightContain],
+      c => BloomFilterMightContain(c(0), c(1))))
+
+  /** The table in `SparkSessionExtensions.injectFunction`'s shape. */
+  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    table.map { case (name, cls, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
+
+  /** Registers every function `spark` lacks; a repeat call changes and
+    * logs nothing (re-registering a name logs a "replaced" warning). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      descriptions.foreach { case (id, info, build) =>
+        if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+      }
+    }
   }
 }

@@ -339,7 +339,7 @@ object Multimodal {
     * pruned away. The driver-side write of ≤ 385 fixture files is
     * landing setup, not the measured plan. */
   def qBinaryIngest(spark: SparkSession, d: String): DataFrame = {
-    val dir = graft.sources.Landing.dir(d, "bin_ingest_v1") { path =>
+    val dir = graft.sources.Landing.dir(spark, d, "bin_ingest_v1") { path =>
       new java.io.File(path).mkdirs()
       // dim-bounded collect (≤385 rows by the id-domain predicate)
       Tables.documents(spark, d)

@@ -217,7 +217,6 @@ object Packing {
     * RAW stored values (what parquet footers hold), never the masked
     * key — the oracle mirrors that split. */
   def qZorderLayout(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.lineitem(spark, d)
       .select(
         col("l_partkey").cast("long").as("pk"),
@@ -244,7 +243,6 @@ object Packing {
     * sized (broadcast); the fact scan runs once per layout plus once
     * for the truth — nothing quadratic. */
   def qZorderSkipping(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val base = Tables.lineitem(spark, d).select(
         col("l_partkey").cast("long").as("pk"),

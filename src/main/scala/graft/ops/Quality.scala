@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Training-data quality operators (SURVEY.md §2.3 E21-E23, E25 + the
   * LLM-pipeline north-star ops from BASELINE.json): exact and
@@ -183,7 +182,6 @@ object Quality {
     *     |docs|-row projection with no generator and no aggregate.
     * Hash semantics identical throughout; the oracle never changed. */
   def qDocFingerprint(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documentsSpread(spark, d)
       .filter(length(col("text")) >= 5)
       .select(col("doc_id"), md5(col("text")).as("full_md5"),
@@ -227,7 +225,6 @@ object Quality {
     * OCCURRENCE. Repetition analysis needs the multiplicities;
     * everything set-based goes through `wordShingleInv` below. */
   private[graft] def wordShingles(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documentsSpread(spark, d)
       .select(col("lang"), col("doc_id"),
         explode(expr("word_shingles(text, 3)")).as("shingle"))
@@ -468,7 +465,6 @@ object Quality {
     * matching the aggregate form's absent group. MinhashSigSpec-style
     * equality with the aggregate form is asserted in QualitySpec. */
   private[graft] def minhashSigFused(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documentsSpread(spark, d)
       .select(col("doc_id"), expr("minhash8(text, 3)").as("s"))
       .filter(col("s").isNotNull)
@@ -768,7 +764,6 @@ object Quality {
     // shingle sets, recomputed map-side from the text (cheaper than
     // re-shuffling the inverted index; the arrays are per-doc
     // vocabulary-sized).
-    GraftFunctions.register(spark)
     val docsArr = Tables.documentsSpread(spark, d)
       .select(col("lang"), col("doc_id"),
         array_distinct(expr("word_shingles(text, 3)")).as("arr"))
@@ -968,7 +963,6 @@ object Quality {
     * threshold as a HAVING. Phrase df collapses map-side; nothing
     * longer than a phrase string ever shuffles. */
   def qBoilerplate(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documentsSpread(spark, d)
       .select(col("doc_id"), explode(expr("word_shingles(text, 5)")).as("phrase"))
       .distinct()
@@ -1045,7 +1039,6 @@ object Quality {
     * hash parity beyond tokenization. */
   def qDupSpans(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(spark)
     val win = Tables.documentsSpread(spark, d)
       .select(col("doc_id"),
         size(split(col("text"), "\\s+")).cast("long").as("n_tokens"),
@@ -1098,7 +1091,6 @@ object Quality {
     * DSIR hashes to 10k buckets — add `hash(g) % 10000` as the key
     * and the stats side becomes a broadcastable constant. */
   def qDsirWeight(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     val occ = Tables.documentsSpread(spark, d)
       .select(col("doc_id"), col("lang"),
         explode(expr("word_shingles(text, 2)")).as("g"))
@@ -1192,7 +1184,6 @@ object Quality {
     * the oracle emits constant TRUE, so a bloom regression flips the
     * boolean and fails the hash. */
   def qBloomDedup(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, d)
       .select(col("doc_id"), md5(col("text")).as("h"))
       .createOrReplaceTempView("bloom_docs")
@@ -1725,7 +1716,6 @@ object Quality {
     * fingerprint frequency is a vocabulary-sized aggregate; only
     * 32-byte hashes shuffle. */
   def qWinnowing(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     val wFwd = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
     val fp = Tables.documentsSpread(spark, d)
       .select(col("doc_id"), posexplode(expr("word_shingles(text, 5)")).as(Seq("pos", "sh")))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.3 E24 +
   * BASELINE.json ANN north star): brute-force cosine top-k as the
@@ -34,7 +33,6 @@ object Similarity {
     * `list_sum` comprehension but ~10× faster than the interpreted
     * `aggregate`/`zip_with` composition. */
   private def withNorm(spark: SparkSession, df: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     df.withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("nrm", expr("sqrt(vec_dot(e, e))"))
   }
@@ -620,7 +618,6 @@ object Similarity {
   /** The per-(vector, subspace) slice stream: vec_id, m ∈ [0,4),
     * sa = the 16-dim slice, daa = its squared norm. */
   private def pqSubs(spark: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, d)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("m", explode(array((0 until 4).map(lit(_)): _*)))

@@ -32,7 +32,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * This node is SURVEY §7.4's case (c): whole-operator semantics the
   * built-ins can't express without overhead, so it gets a LogicalPlan
   * + SparkStrategy + SparkPlan, registered via SparkSessionExtensions
-  * (GraftExtensions) or `spark.experimental.extraStrategies`
+  * (`graft.plans.GraftExtensions`, defined in VecDotRewrite.scala) or
+  * `spark.experimental.extraStrategies`
   * (AsOf.ensureRegistered). The physical operator (AsOfJoinExec below)
   * declares the same requirements SortMergeJoin does — co-partition by
   * key, sort each side by (key, time) — and then streams both sides in
@@ -527,8 +528,9 @@ case class BroadcastAsOfJoinExec(
   * manual child selection. */
 object AsOf {
 
-  /** Idempotently add the planner strategy to a session. GraftExtensions
-    * also injects it for `spark.sql.extensions`-configured sessions. */
+  /** Idempotently add the planner strategy and pruning rule to a
+    * session. [[GraftExtensions]] (VecDotRewrite.scala) also injects
+    * both for `spark.sql.extensions`-configured sessions. */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =

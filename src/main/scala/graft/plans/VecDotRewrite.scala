@@ -1,13 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.{MinHash8, ShingleMinMaxMd5, VecDot, WordShingles, ZOrderKey}
+import graft.functions.{GraftFunctions, VecDot}
 
 /** Optimizer rule: rewrite the declarative dot-product idiom
   *
@@ -49,31 +48,13 @@ object VecDotRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions wiring graft's native functions and optimizer
-  * rule — production entry point:
+/** Session extensions wiring graft's native functions (the
+  * [[graft.functions.GraftFunctions]] table), optimizer rules and
+  * planner strategy — production entry point:
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => WordShingles(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "minhash8"),
-      (children: Seq[Expression]) => MinHash8(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_minmax_md5"),
-      new ExpressionInfo(classOf[ShingleMinMaxMd5].getName, "shingle_minmax_md5"),
-      (children: Seq[Expression]) => ShingleMinMaxMd5(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("zorder16"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "zorder16"),
-      (children: Seq[Expression]) => ZOrderKey(children.head, children(1))))
+    GraftFunctions.descriptions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => VecDotRewrite)
     ext.injectOptimizerRule(_ => AsOfJoinPruning)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)

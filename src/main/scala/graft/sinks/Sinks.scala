@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Sink-side operators (SURVEY.md §2.1 R16/R22).
@@ -30,10 +31,13 @@ object Sinks {
     * directory per day × shuffle partitions files; callers coalesce
     * if the per-day volume is small. */
   def writeDatePartitioned(df: DataFrame, path: String): Unit =
-    df.withColumn("date_part", date_format(col("ts"), "yyyyMMdd"))
-      .write.mode(SaveMode.Append)
+    withDatePart(df).write.mode(SaveMode.Append)
       .partitionBy("date_part")
       .parquet(path)
+
+  /** The `date_part` partition column: UTC day of `ts` as yyyyMMdd. */
+  private def withDatePart(df: DataFrame): DataFrame =
+    df.withColumn("date_part", date_format(col("ts"), "yyyyMMdd"))
 
   /** R22: verify-then-delete move. Returns (rowsMoved, deletedSource).
     * The source survives any verification failure — exactly the
@@ -104,20 +108,29 @@ object Sinks {
     * from the existing sink are written (the reference's
     * skip-if-exists re-run safety, app.py:270-273, 419-421). Returns
     * the number of appended rows. The anti join is key-only; at scale
-    * the sink side prunes to the key column at scan time. */
+    * the sink side prunes to the key column at scan time. A
+    * partitioned sink (e.g. a [[writeDatePartitioned]] root) is
+    * appended to partitioned by its own columns — flat files at its
+    * root would be invisible to its partitioned read — with a missing
+    * `date_part` derived as [[writeDatePartitioned]] derives it. */
   def appendNew(spark: SparkSession, df: DataFrame, key: String, path: String): Long = {
-    val fresh =
+    val existing =
       if (new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(new Path(path))) {
-        val existing = spark.read.parquet(path).select(key)
-        df.join(existing, Seq(key), "left_anti")
-      } else df
+            .exists(new Path(path))) Some(spark.read.parquet(path))
+      else None
+    val partCols = existing.toSeq.flatMap(_.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.partitionSchema.fieldNames
+    }).flatten
+    val shaped =
+      if (partCols.contains("date_part") && !df.columns.contains("date_part")) withDatePart(df)
+      else df
+    val fresh = existing.fold(shaped)(e => shaped.join(e.select(key), Seq(key), "left_anti"))
     // persist so the anti-join runs once, not once for the count and
     // again for the write
     fresh.persist()
     try {
       val n = fresh.count()
-      if (n > 0) fresh.write.mode(SaveMode.Append).parquet(path)
+      if (n > 0) fresh.write.mode(SaveMode.Append).partitionBy(partCols: _*).parquet(path)
       n
     } finally fresh.unpersist()
   }

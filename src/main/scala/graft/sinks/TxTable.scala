@@ -21,6 +21,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * {{{
   *   <table>/_txlog/00000000000000000000.txn   // version-numbered commits
   *   <table>/data/<attemptId>/part-*.parquet   // writer-private staging
+  *   <table>/data/<attemptId>/k=v/any.file     // (commitOnce: any writer)
   * }}}
   *
   * A `.txn` file is a line manifest (`graft-txn-v1` header, `op=`,
@@ -657,24 +658,43 @@ object TxTable {
       .reduceOption(_ max _).map(_ + 1).getOrElse(0L)
   }
 
-  /** Stages `df` under a fresh writer-private directory and returns
-    * the staged table-relative file paths. */
-  private def stage(df: DataFrame, table: String): (Seq[String], Map[String, String]) = {
-    val attempt = java.util.UUID.randomUUID().toString
-    val rel = s"data/$attempt"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$rel")
+  /** Runs `write` into a fresh writer-private directory; returns it
+    * (table-relative), every data file under it recursively (names
+    * starting `_` or `.` are writer metadata, as in Spark's scans),
+    * and, if `footers`, footer stats for the parquet ones. */
+  private def stage(spark: SparkSession, table: String, footers: Boolean = true)(
+      write: String => Unit): (String, Seq[String], Map[String, String]) = {
+    val rel = s"data/${java.util.UUID.randomUUID()}"
+    write(s"$table/$rel")
     val dir = new Path(s"$table/$rel")
-    val fs = fsOf(df.sparkSession, dir)
-    val added = fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"$rel/${s.getPath.getName}")
-      .sorted
+    val fs = fsOf(spark, dir)
+    def walk(p: Path, prefix: String): Seq[String] = fs.listStatus(p).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (st.isDirectory) walk(st.getPath, s"$prefix/$name")
+      else Seq(s"$prefix/$name")
+    }
+    val added = if (fs.exists(dir)) walk(dir, rel).sorted else Nil
     // footer stats per staged file (metadata-only, best-effort): the
     // data-skipping half of the commit
-    val stats = added.flatMap(f =>
-      footerStats(df.sparkSession, new Path(s"$table/$f")).map(f -> _)).toMap
-    (added, stats)
+    val stats = added.filter(f => footers && f.endsWith(".parquet")).flatMap(f =>
+      footerStats(spark, new Path(s"$table/$f")).map(f -> _)).toMap
+    (rel, added, stats)
   }
+
+  private def parquetWriter(df: DataFrame): String => Unit =
+    df.write.mode(SaveMode.ErrorIfExists).parquet(_)
+
+  /** Deletes a staging directory no commit references (a lost race). */
+  private def unstage(spark: SparkSession, table: String, rel: String): Unit = {
+    val dir = new Path(s"$table/$rel")
+    fsOf(spark, dir).delete(dir, true)
+  }
+
+  /** The writer-private staging directory (`data/<attemptId>`) a
+    * table-relative file path was staged under. */
+  private[graft] def stagingDirOf(file: String): String =
+    file.split('/').take(2).mkString("/")
 
   /** Transactional append: stage, then claim the next version (re-list
     * and re-claim on a lost race — the staged files are reused).
@@ -690,7 +710,7 @@ object TxTable {
     // when it folds (defense in depth), but the common failure is
     // caught at the writer with the writer's stack.
     schemaAt(spark, table).foreach(existing => mergeSchema(existing, df.schema))
-    val (added, stats) = stage(df, table)
+    val (rel, added, stats) = stage(spark, table)(parquetWriter(df))
     val content = render("append", added, Seq.empty, Some(df.schema.json), stats)
     var attempt = 0
     while (attempt < maxRetries) {
@@ -708,22 +728,27 @@ object TxTable {
     }
     // reclaim our own staging before surfacing the failure — the same
     // cleanup replaceCompact/commitOnce do on a lost race (ADVICE r10)
-    added.headOption.foreach { f =>
-      val stagedDir = new Path(s"$table/$f").getParent
-      fsOf(spark, stagedDir).delete(stagedDir, true)
-    }
+    unstage(spark, table, rel)
     throw new IllegalStateException(
       s"TxTable.append lost $maxRetries claim races on $table")
   }
 
   /** Write-once initialization: exactly one concurrent caller's frame
     * becomes version 0; every other caller's staged copy is discarded.
-    * Returns true iff THIS call won. The multi-JVM-safe form of a
-    * landed write-once artifact (two processes both finding a marker
-    * absent and overwriting each other mid-read was the race the
-    * marker-file pattern could not exclude). */
-  def commitOnce(df: DataFrame, table: String): Boolean = {
-    val spark = df.sparkSession
+    * Returns true iff THIS call won. */
+  def commitOnce(df: DataFrame, table: String): Boolean =
+    commitOnce(df.sparkSession, table, Some(df.schema))(parquetWriter(df))
+
+  /** [[commitOnce]] for any writer: `write` fills the staging
+    * directory it is given (any format, any layout) and version 0 lists
+    * every data file under it — the multi-JVM-safe landing of a
+    * write-once artifact (sources.Landing). Footer stats, which only
+    * [[readPruned]] uses, are collected for a frame with a `schema`;
+    * a directory landing is read back by its own format's reader and
+    * skips the footer reads (about 12 ms per parquet file on a
+    * 4-core host). */
+  def commitOnce(spark: SparkSession, table: String, schema: Option[StructType] = None)(
+      write: String => Unit): Boolean = {
     fenceIfNeeded(spark, table)
     // initialized = ANY claimed version or checkpoint exists (that is
     // exactly nextVersion > 0) — the from-zero commits() view goes
@@ -733,16 +758,11 @@ object TxTable {
     // write — the re-claim would "succeed" while its data stays
     // invisible to the checkpoint-seeded read).
     if (nextVersion(spark, table) > 0) return false
-    val (added, stats) = stage(df, table)
+    val (rel, added, stats) = stage(spark, table, footers = schema.nonEmpty)(write)
     val won = tryClaim(spark, table, 0L,
-      render("append", added, Seq.empty, Some(df.schema.json), stats))
-    if (!won) {
-      // lost: reclaim the orphaned staging directory immediately
-      added.headOption.foreach { f =>
-        val stagedDir = new Path(s"$table/$f").getParent
-        fsOf(spark, stagedDir).delete(stagedDir, true)
-      }
-    }
+      render("append", added, Seq.empty, schema.map(_.json), stats))
+    // lost: reclaim the orphaned staging directory immediately
+    if (!won) unstage(spark, table, rel)
     won
   }
 
@@ -776,16 +796,13 @@ object TxTable {
         if (sortBy.isEmpty) base.repartition(nOut)
         else base.repartitionByRange(nOut, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
-      val (added, stats) = stage(compacted, table)
+      val (rel, added, stats) = stage(spark, table)(parquetWriter(compacted))
       if (tryClaim(spark, table, snapV + 1,
           render("replace", added, current, Some(compacted.schema.json), stats)))
         return snapV + 1
       // a concurrent commit interleaved: our snapshot (and removal
       // set) is stale — drop the staged copy and retry from fresh
-      added.headOption.foreach { f =>
-        val stagedDir = new Path(s"$table/$f").getParent
-        fsOf(spark, stagedDir).delete(stagedDir, true)
-      }
+      unstage(spark, table, rel)
       attempt += 1
     }
     throw new IllegalStateException(
@@ -808,7 +825,7 @@ object TxTable {
     // vacuum delete live data (ADVICE r11, high)
     val ckptAdds = rawCheckpoints(spark, table).flatMap(_.added)
     val referenced = (all.flatMap(c => c.added ++ c.removed) ++ ckptAdds)
-      .map(f => new Path(s"$table/$f").getParent.getName).toSet
+      .map(f => stagingDirOf(f).stripPrefix("data/")).toSet
     val dataDir = new Path(table, "data")
     val fs = fsOf(spark, dataDir)
     val now = System.currentTimeMillis()

@@ -26,7 +26,7 @@ object CsvSource {
     * names are \w+ in the testdata (asserted in SinkSourceSpec), so no
     * quoting/escaping ambiguity exists in the round-trip. */
   def qCsvConfig(spark: SparkSession, d: String): DataFrame = {
-    val dir = Landing.dir(d, "csv_cfg") { path =>
+    val dir = Landing.dir(spark, d, "csv_cfg") { path =>
       val rows = Tables.nation(spark, d)
         .select("n_nationkey", "n_name", "n_regionkey")
         .collect() // config-sized dim (25 rows) — driver-side like JsonSource

@@ -47,7 +47,7 @@ object JsonSource {
       val g = r.getAs[Number]("n_regionkey").longValue
       s"""  {"n_nationkey": $k, "n_name": "${r.getAs[String]("n_name")}", "n_regionkey": $g}"""
     }.mkString("[\n", ",\n", "\n]")
-    val dir = Landing.dir(d, "json_cfg") { path =>
+    val dir = Landing.dir(spark, d, "json_cfg") { path =>
       Files.createDirectories(Paths.get(path))
       Files.writeString(Paths.get(path, "config.json"), doc)
     }

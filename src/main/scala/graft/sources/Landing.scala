@@ -1,8 +1,12 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.sinks.TxTable
+
 /** Write-once landing area for the file-format round-trip queries
-  * (CSV/JSON config, ORC, text lines, partitioned parquet) and the
-  * shared pair/edge artifacts (lsh_pairs_v1, lift_edges_v1).
+  * (CSV/JSON/XML config, ORC, text lines, partitioned parquet, binary
+  * files) and the shared pair/edge artifacts (lsh_pairs_v2, ...).
   *
   * Each of those queries must first LAND data in its format before the
   * scan under test can read it. Landing into a fresh temp directory on
@@ -10,11 +14,19 @@ package graft.sources
   * window, so the reported "scan" seconds included a write, and (b)
   * leaks a directory per call (Bench runs each query 4+ times per
   * round). Instead: a deterministic path keyed by (sfDir fingerprint,
-  * kind), the write executed only if the `_LANDED` marker is absent —
-  * first call lands, every later call (and every later Bench pass; the
-  * min-of-passes estimator then times the pure read) just scans. The
-  * marker is written AFTER the data so a crashed landing re-lands
-  * rather than serving a partial directory.
+  * kind), landed once — first call lands, every later call (and every
+  * later Bench pass; the min-of-passes estimator then times the pure
+  * read) just scans.
+  *
+  * One protocol lands every artifact: the [[graft.sinks.TxTable]]
+  * version-0 claim ([[graft.sinks.TxTable.commitOnce]]). The writer
+  * fills a private staging directory; the artifact exists once a
+  * commit of version 0 names that directory's files. So a crashed
+  * landing leaves no commit and the next caller re-lands; two JVMs
+  * racing to land the same artifact both stage but only one claims
+  * version 0 (the loser's staging is reclaimed), and every reader
+  * follows the claim — no reader observes a half-written or doubly
+  * written directory.
   *
   * The key folds in a SOURCE-DATA FINGERPRINT (name+size+mtime of every
   * file under sfDir, one level deep) so a regenerated corpus at the
@@ -77,46 +89,36 @@ object Landing {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  /** Returns the landing directory for (sfDir, kind), running `write`
-    * first iff this (JVM, disk) has not landed it for the CURRENT
-    * corpus content yet. Landing under a NEW fingerprint first deletes
-    * every sibling directory for the same sfDir with a different
-    * fingerprint: a regenerated corpus re-keys the landing (the r5
-    * staleness fix), and without the sweep each regeneration stranded
-    * a full artifact set (lsh_pairs, lift_edges, ngram_pairs, format
-    * fixtures) under the dead key — bounded per round but monotone
-    * across rounds on a long-lived machine. */
-  def dir(sfDir: String, kind: String)(write: String => Unit): String = synchronized {
-    val path = keyedPath(sfDir, kind)
-    if (!landed(path)) {
-      val marker = new java.io.File(path, "_LANDED")
-      if (!marker.exists()) {
-        timed(kind)(write(path))
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
-      landed += path
-    }
-    path
+  /** Returns the landing directory for (sfDir, kind) — the staging
+    * directory committed as version 0 — running `write` into a fresh
+    * staging directory first iff no version 0 is committed for the
+    * CURRENT corpus content yet. Landing under a NEW fingerprint first
+    * deletes every sibling directory for the same sfDir with a
+    * different fingerprint: a regenerated corpus re-keys the landing
+    * (the r5 staleness fix), and without the sweep each regeneration
+    * stranded a full artifact set (lsh_pairs, lift_edges, ngram_pairs,
+    * format fixtures) under the dead key — bounded per round but
+    * monotone across rounds on a long-lived machine. */
+  def dir(spark: SparkSession, sfDir: String, kind: String)(write: String => Unit): String = {
+    val path = land(spark, sfDir, kind)(TxTable.commitOnce(spark, _)(write))
+    val first = TxTable.files(spark, path).headOption.getOrElse(
+      throw new IllegalStateException(s"landing $kind committed no data files"))
+    s"$path/${TxTable.stagingDirOf(first)}"
   }
 
-  /** Transactional variant of [[dir]] for artifacts that are TABLES
-    * (the shared pair/edge artifacts): initialization goes through
-    * [[graft.sinks.TxTable.commitOnce]], so two JVMs racing to land
-    * the same artifact serialize — one frame becomes version 0, the
-    * loser's staging is reclaimed, and a reader NEVER observes a
-    * half-written or doubly-written directory (the race window the
-    * `_LANDED` marker pattern cannot exclude: marker-absent in two
-    * processes at once). A crash mid-landing leaves no commit, so the
-    * next caller re-lands; a crash mid-read of a re-landing is
-    * impossible because committed files are immutable. Consumers read
-    * via `TxTable.read(spark, path)`. */
-  def table(spark: org.apache.spark.sql.SparkSession, sfDir: String, kind: String)(
-      write: => org.apache.spark.sql.DataFrame): String = synchronized {
+  /** [[dir]] for artifacts that are TABLES (the shared pair/edge
+    * artifacts): the frame is staged as parquet, and consumers read
+    * the landing path via `TxTable.read(spark, path)`. */
+  def table(spark: SparkSession, sfDir: String, kind: String)(write: => DataFrame): String =
+    land(spark, sfDir, kind)(TxTable.commitOnce(write, _))
+
+  /** The landing path for (sfDir, kind), running the landing `commit`
+    * (timed) first iff no version 0 is committed there yet. */
+  private def land(spark: SparkSession, sfDir: String, kind: String)(
+      commit: String => Boolean): String = synchronized {
     val path = keyedPath(sfDir, kind)
     if (!landed(path)) {
-      if (graft.sinks.TxTable.commits(spark, path).isEmpty)
-        timed(kind)(graft.sinks.TxTable.commitOnce(write, path))
+      if (TxTable.commits(spark, path).isEmpty) timed(kind)(commit(path))
       landed += path
     }
     path
@@ -126,7 +128,7 @@ object Landing {
     * current corpus content (this JVM or on disk) — never executes a
     * landing. Lets cheap registration paths (Tables.createViews)
     * expose a landed artifact without paying its pipeline. */
-  def tableIfLanded(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+  def tableIfLanded(spark: SparkSession, sfDir: String,
       kind: String): Option[String] = synchronized {
     val path = keyedPath(sfDir, kind)
     if (landed(path) || graft.sinks.TxTable.files(spark, path).nonEmpty) {

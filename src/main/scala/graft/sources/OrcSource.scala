@@ -15,7 +15,7 @@ import graft.Tables
 object OrcSource {
 
   def qOrcRoundtrip(spark: SparkSession, d: String): DataFrame = {
-    val dir = Landing.dir(d, "orc_cfg") { path =>
+    val dir = Landing.dir(spark, d, "orc_cfg") { path =>
       Tables.nation(spark, d)
         .repartition(1) // config-sized dim: one file, deterministic layout
         .write.mode("overwrite").orc(path)

@@ -23,7 +23,7 @@ import graft.Tables
 object PartitionedSource {
 
   def qPartitionPrune(spark: SparkSession, d: String): DataFrame = {
-    val dir = Landing.dir(d, "part_orders") { path =>
+    val dir = Landing.dir(spark, d, "part_orders") { path =>
       Tables.orders(spark, d)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     }

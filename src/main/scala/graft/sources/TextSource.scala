@@ -23,7 +23,7 @@ import graft.Tables
 object TextSource {
 
   def qTextLines(spark: SparkSession, d: String): DataFrame = {
-    val dir = Landing.dir(d, "text_lines") { path =>
+    val dir = Landing.dir(spark, d, "text_lines") { path =>
       Tables.documents(spark, d)
         .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
         .repartition(1)

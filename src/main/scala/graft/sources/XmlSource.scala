@@ -28,7 +28,7 @@ object XmlSource {
     * by key); dim names are \w+ in the testdata (asserted in
     * SinkSourceSpec), so no entity-escaping ambiguity exists. */
   def qXmlConfig(spark: SparkSession, d: String): DataFrame = {
-    val dir = Landing.dir(d, "xml_cfg") { path =>
+    val dir = Landing.dir(spark, d, "xml_cfg") { path =>
       val rows = Tables.nation(spark, d)
         .select("n_nationkey", "n_name", "n_regionkey")
         .collect() // config-sized dim (25 rows) — driver-side like JsonSource

@@ -310,7 +310,6 @@ object Streams {
 
   def nearDupGate(spark: SparkSession, arrivals: DataFrame,
       indexDocs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     def sigs(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"), expr("minhash8(text, 3)").as("s"),

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Perf-triage harness (dev tooling, NOT part of the engine surface —
   * lives under src/test like Scratch). Runs each named query exactly
@@ -26,20 +25,8 @@ object BenchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2) // as Bench
-      .config("spark.sql.codegen.cache.maxEntries", 10000) // as Bench
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") // as Bench
-    // A/B config experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    // configs and SPARK_GRAFT_CONF A/B overrides exactly as Bench
+    val spark = Sessions.build(cpus.toInt, Bench.confOverrides: _*)
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new AtomicInteger

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev-only profiling harness for the nearDupGate stage volumes
@@ -8,12 +7,7 @@ import org.apache.spark.sql.functions._
 object GateProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
+    val spark = Sessions.build(32, "spark.sql.autoBroadcastJoinThreshold" -> "64m")
     spark.sparkContext.setLogLevel("WARN")
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text")
     def t[A](tag: String)(f: => A): A = {

@@ -4,23 +4,29 @@ import java.io.File
 
 import org.apache.spark.sql.functions._
 
+import graft.sinks.TxTable
 import graft.sources.Landing
 
 /** Crash-consistency contract of the write-once Landing area (the
   * mechanism behind the format round-trip queries AND the landed
-  * near-dup pair artifacts): the `_LANDED` marker is written AFTER the
-  * data, so a landing that crashed mid-write must re-land on the next
-  * call instead of serving a partial directory — and a completed
+  * near-dup pair artifacts): an artifact exists once its version 0 is
+  * committed, so a landing that crashed mid-write must re-land on the
+  * next call instead of serving a partial directory — and a completed
   * landing must never re-run its writer. */
 class LandingSpec extends SparkSpec {
 
   private def freshSfDir(): String =
     java.nio.file.Files.createTempDirectory("graft_landing_sf_").toString
 
+  /** Version 0 is committed at the landing path `dir` was served from
+    * (`dir` is that path's `data/<attemptId>` staging directory). */
+  private def committed(dir: String): Boolean =
+    TxTable.commits(spark, new File(dir).getParentFile.getParent).map(_.version) == Seq(0L)
+
   test("landing runs the writer once, then serves the artifact without re-running") {
     val sf = freshSfDir()
     var writes = 0
-    def land() = Landing.dir(sf, "spec_once") { path =>
+    def land() = Landing.dir(spark, sf, "spec_once") { path =>
       writes += 1
       Tables.region(spark, sfDir).write.parquet(path)
     }
@@ -28,28 +34,28 @@ class LandingSpec extends SparkSpec {
     val d2 = land()
     assert(d1 == d2 && writes == 1)
     assert(spark.read.parquet(d1).count() == 5)
-    assert(new File(d1, "_LANDED").exists())
+    assert(committed(d1))
   }
 
   test("a crashed landing (data without marker) re-lands instead of serving partial data") {
     val sf = freshSfDir()
     // simulate the crash: first writer dies AFTER writing partial data
-    // but BEFORE the marker
+    // but BEFORE the version-0 commit that marks the landing complete
     intercept[RuntimeException] {
-      Landing.dir(sf, "spec_crash") { path =>
+      Landing.dir(spark, sf, "spec_crash") { path =>
         Tables.region(spark, sfDir).limit(2).write.parquet(path)
-        throw new RuntimeException("crash before marker")
+        throw new RuntimeException("crash before commit")
       }
     }
-    // the partial directory exists but is unmarked
+    // the partial staging directory exists but no commit names it
     var relanded = false
-    val dir = Landing.dir(sf, "spec_crash") { path =>
+    val dir = Landing.dir(spark, sf, "spec_crash") { path =>
       relanded = true
       Tables.region(spark, sfDir).write.mode("overwrite").parquet(path)
     }
-    assert(relanded, "unmarked partial landing was served as complete")
+    assert(relanded, "uncommitted partial landing was served as complete")
     assert(spark.read.parquet(dir).count() == 5)
-    assert(new File(dir, "_LANDED").exists())
+    assert(committed(dir))
   }
 
   private val root = new File(s"${sys.props("java.io.tmpdir")}/graft_landing")
@@ -65,7 +71,7 @@ class LandingSpec extends SparkSpec {
 
   test("regeneration sweeps AGED stale fingerprints but spares fresh ones") {
     val sf = freshSfDir()
-    def land() = Landing.dir(sf, "spec_prune") { path =>
+    def land() = Landing.dir(spark, sf, "spec_prune") { path =>
       Tables.region(spark, sfDir).write.mode("overwrite").parquet(path)
     }
     land()
@@ -92,7 +98,7 @@ class LandingSpec extends SparkSpec {
     assert(!afterAged.contains(before.head), s"aged stale dir not pruned: $afterAged")
     assert(afterAged.forall(d => d != before.head))
     assert(afterAged.exists(d =>
-      new File(new File(root, d), "spec_prune/_LANDED").exists()))
+      TxTable.commits(spark, new File(new File(root, d), "spec_prune").getPath).nonEmpty))
   }
 
   test("distinct corpus paths with identical sanitized names never share a sweep scope") {
@@ -104,7 +110,7 @@ class LandingSpec extends SparkSpec {
     new File(sfA).mkdirs()
     new File(sfB).mkdirs()
     assert(sfA.replaceAll("[^A-Za-z0-9.]", "_") == sfB.replaceAll("[^A-Za-z0-9.]", "_"))
-    def land(sf: String) = Landing.dir(sf, "spec_twin") { path =>
+    def land(sf: String) = Landing.dir(spark, sf, "spec_twin") { path =>
       Tables.region(spark, sfDir).write.mode("overwrite").parquet(path)
     }
     val dA = land(sfA)
@@ -119,8 +125,7 @@ class LandingSpec extends SparkSpec {
     probe.createNewFile()
     probe.setLastModified(System.currentTimeMillis() + 5000)
     land(sfA)
-    assert(new File(dB, "_LANDED").exists(),
-      "sweep of corpus A deleted corpus B's live landing")
+    assert(committed(dB), "sweep of corpus A deleted corpus B's live landing")
     assert(spark.read.parquet(dB).count() == 5)
   }
 

@@ -119,7 +119,6 @@ class QualitySpec extends SparkSpec {
 
   test("shingle_minmax_md5 edge cases: exact-width text, multibyte chars, short text") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (1L, "abcde"),            // exactly one window
       (2L, "héllö wörld déjà"), // multibyte: char windows, utf-8 byte hashing
@@ -147,7 +146,6 @@ class QualitySpec extends SparkSpec {
     // and generated code NPEs dereferencing the null array
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    graft.functions.GraftFunctions.register(spark)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = false)))
@@ -502,7 +500,6 @@ class QualitySpec extends SparkSpec {
     // pruning power: bloom hits must stay near the true-dup count
     // (8192 bits / <=400 items keeps the false-positive rate low) —
     // a bloom that waves everything through saves nothing at 100 TB
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, d)
       .select(col("doc_id"), md5(col("text")).as("h"))
       .createOrReplaceTempView("bloom_spec_docs")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan-inspection / parity-triage harness (dev tooling, NOT
   * part of the engine surface — lives under src/test so non-test LoC
   * counts only engine code; run it via scripts/run_main.sh, whose
@@ -9,13 +7,9 @@ import org.apache.spark.sql.SparkSession
 object Scratch {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the recursive-CTE oracles (k-hop, PageRank) unroll past the
-      // 1M-row default at sf0.01 — a limit, not a semantics change
-      .config("spark.sql.cteRecursionRowLimit", 100000000)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the recursive-CTE oracles (k-hop, PageRank) unroll past the
+    // 1M-row default at sf0.01 — a limit, not a semantics change
+    val spark = Sessions.build(cpus.toInt, "spark.sql.cteRecursionRowLimit" -> "100000000")
     spark.sparkContext.setLogLevel("ERROR")
     // plan captures must reflect the bench SF (plans/r12 evidence), so
     // the explain path honors the same env the bench reads
@@ -31,7 +25,6 @@ object Scratch {
       println(text)
       if (args.length > 2 && args(2) == "run") {
         Tables.createViews(spark, d)
-        graft.functions.GraftFunctions.register(spark)
         val viaSql = spark.sql(text).collect().map(_.toString).sorted
         val viaApi = SparkEntry.queries(name)(spark, d).collect().map(_.toString).sorted
         println(s"rows sql=${viaSql.length} api=${viaApi.length}")
@@ -98,7 +91,6 @@ object Scratch {
       // sqlone <name>: run the translated oracle through spark.sql and
       // print the first few differing rows vs the DataFrame result
       Tables.createViews(spark, d)
-      graft.functions.GraftFunctions.register(spark)
       val name = args(1)
       val sql = SqlTranslate(SparkEntry.oracleSql(name),
         lenIsLength = args.length > 2 && args(2) == "len")

@@ -2,14 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.ops.Similarity
 
 /** Vector-search specs incl. the native vec_dot expression. */
 class SimilaritySpec extends SparkSpec {
 
   test("vec_dot matches the interpreted aggregate/zip_with fold bit-for-bit") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
@@ -25,7 +23,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("vec_dot on the embeddings table agrees with the builtin fold") {
-    GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, sfDir)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
     val diff = v.select(
@@ -37,7 +34,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("vec_dot rejects wrong input types at analysis time") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Seq(1, 2), "x")).toDF("a", "b")
     val e = intercept[Exception](df.select(expr("vec_dot(a, b)")).collect())
@@ -75,7 +71,6 @@ class SimilaritySpec extends SparkSpec {
     val out = Similarity.qAnnLsh(spark, sfDir).collect()
     assert(out.nonEmpty)
     // exactness: each emitted cosine equals the directly-computed one
-    GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, sfDir)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .select(col("vec_id"), col("e"),
@@ -673,7 +668,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   private def labelAuditInput(d: String) = {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, d)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("nrm", expr("sqrt(vec_dot(e, e))"))
@@ -702,7 +696,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("embed neardup gate: member-level ≡ collapse on the duplicate-free corpus") {
     import org.apache.spark.sql.Row
-    GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, sfDir)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("nrm", expr("sqrt(vec_dot(e, e))"))
@@ -732,7 +725,6 @@ class SimilaritySpec extends SparkSpec {
     // and every surviving pair must also appear in brute-force ground
     // truth with the identical rounded cosine (precision 1).
     val (dir, rows) = labelAuditFixture()
-    GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, dir)
       .withColumn("e", expr("CAST(embedding AS ARRAY<DOUBLE>)"))
       .withColumn("nrm", expr("sqrt(vec_dot(e, e))"))

@@ -55,6 +55,20 @@ class SinkSourceSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 5)
   }
 
+  test("append aimed at a date-partitioned sink's root lands partitioned and reads back whole") {
+    import spark.implicits._
+    val out = tmp() + "/dated"
+    def rows(ids: Range) = ids.map(i =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${10 + i / 10}%02d ${i % 10 * 2 + 3}%02d:00:00")))
+      .toDF("event_id", "ts")
+    Sinks.writeDatePartitioned(rows(0 until 10), out) // one day
+    // the overlapping window: half already landed, half the next day
+    assert(Sinks.appendNew(spark, rows(5 until 15), "event_id", out) == 5)
+    val back = spark.read.parquet(out)
+    assert(back.select("event_id").as[Long].collect().sorted.toSeq == (0L until 15L))
+    assert(back.filter(col("date_part") === 20240111).count() == 5)
+  }
+
   test("idempotent foreachBatch: re-delivered batchId is skipped, crash-replay converges") {
     val out = tmp() + "/stream_sink"
     val b0 = Tables.region(spark, sfDir)

@@ -12,14 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    val s = Sessions.build(4, "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

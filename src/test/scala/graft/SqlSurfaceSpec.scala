@@ -422,20 +422,26 @@ class SqlSurfaceSpec extends SparkSpec {
         |JOIN customer ON o_custkey = c_custkey
         |ORDER BY total_qty DESC, o_orderkey LIMIT 20""".stripMargin)
 
-  test(s"SQL-surface parity: ${sqlMirrors.size} declared queries return identical rows through plain SQL") {
+  /** Each named declared query's DataFrame result equals `sqlOf(name)`
+    * run through spark.sql over the registered views: the same column
+    * names and the same rows (sorted, duplicates counted). */
+  private def assertSqlParity(names: Seq[String])(sqlOf: String => String): Unit = {
     Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    sqlMirrors.foreach { case (name, sqlText) =>
+    names.foreach { name =>
       val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(sqlText)
+      val viaSql = spark.sql(sqlOf(name))
       assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
         s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
       val a = viaApi.collect().map(_.toString).sorted
       val b = viaSql.collect().map(_.toString).sorted
       assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: SQL surface diverged from the DataFrame result")
+      assert(a.sameElements(b), s"$name: SQL text through spark.sql diverged from the DataFrame result")
       spark.catalog.clearCache()
     }
+  }
+
+  test(s"SQL-surface parity: ${sqlMirrors.size} declared queries return identical rows through plain SQL") {
+    assertSqlParity(sqlMirrors.keys.toSeq)(sqlMirrors)
   }
 
   /** The second front-door sweep: these declared queries' ORACLE texts
@@ -476,19 +482,7 @@ class SqlSurfaceSpec extends SparkSpec {
     "q_value_histogram", "q_window_rank", "q_xml_config", "q_zscore_outliers")
 
   test(s"SQL-surface parity: ${portableOracles.size} oracle texts are ANSI-portable and row-identical through spark.sql") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    portableOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(SparkEntry.oracleSql(name))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
-        s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: oracle text through spark.sql diverged from the DataFrame result")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(portableOracles)(SparkEntry.oracleSql)
   }
 
   /** One dialect token away from portable: these oracles' ONLY
@@ -507,19 +501,7 @@ class SqlSurfaceSpec extends SparkSpec {
     "q_user_entropy")
 
   test(s"SQL-surface parity: ${divPortableOracles.size} more oracle texts are portable modulo '//' = div") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    divPortableOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(SparkEntry.oracleSql(name).replace("//", " div "))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
-        s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: translated oracle through spark.sql diverged")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(divPortableOracles)(n => SparkEntry.oracleSql(n).replace("//", " div "))
   }
 
   /** The fourth sweep: oracles whose only dialect-isms are FUNCTION
@@ -550,19 +532,7 @@ class SqlSurfaceSpec extends SparkSpec {
     "q_rolling_time", "q_sessionize", "q_window_suite", "q_winsorize")
 
   test(s"SQL-surface parity: ${renamePortableOracles.size} more oracle texts are portable modulo mechanical function renames") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    renamePortableOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(renameTranslate(SparkEntry.oracleSql(name)))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
-        s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: renamed oracle through spark.sql diverged")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(renamePortableOracles)(n => renameTranslate(SparkEntry.oracleSql(n)))
   }
 
   /** The fifth sweep (round 10): oracles portable through the FULL
@@ -599,19 +569,7 @@ class SqlSurfaceSpec extends SparkSpec {
     "q_wau_stickiness", "q_woe_encode", "q_zipf_slope", "q_zorder_skipping")
 
   test(s"SQL-surface parity: ${translatedOracles.size} more oracle texts are portable through the full SqlTranslate chain") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    translatedOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(SqlTranslate(SparkEntry.oracleSql(name)))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
-        s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: translated oracle through spark.sql diverged")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(translatedOracles)(n => SqlTranslate(SparkEntry.oracleSql(n)))
   }
 
   /** Same chain with len() read as LENGTH (string) instead of SIZE
@@ -663,54 +621,22 @@ class SqlSurfaceSpec extends SparkSpec {
     "q_weighted_sample", "q_winnowing")
 
   test(s"SQL-surface parity: ${comprehensionOracles.size} list-comprehension oracle texts are portable through the r11 chain") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    comprehensionOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(SqlTranslate(SparkEntry.oracleSql(name)))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq,
-        s"$name: column names diverge (${viaApi.columns.mkString(",")} vs ${viaSql.columns.mkString(",")})")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length, s"$name: ${a.length} vs ${b.length} rows")
-      assert(a.sameElements(b), s"$name: translated oracle through spark.sql diverged")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(comprehensionOracles)(n => SqlTranslate(SparkEntry.oracleSql(n)))
   }
 
   test(s"SQL-surface parity: ${translatedLenOracles.size} more via the chain's len-as-length reading") {
-    Tables.createViews(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
-    translatedLenOracles.foreach { name =>
-      val viaApi = SparkEntry.queries(name)(spark, sfDir)
-      val viaSql = spark.sql(SqlTranslate(SparkEntry.oracleSql(name), lenIsLength = true))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq, s"$name: column names diverge")
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length && a.sameElements(b), s"$name: diverged through spark.sql")
-      spark.catalog.clearCache()
-    }
+    assertSqlParity(translatedLenOracles)(n => SqlTranslate(SparkEntry.oracleSql(n), lenIsLength = true))
   }
 
   test("SQL-surface parity: the recursive-CTE oracle (q_khop_reach) runs VERBATIM through spark.sql") {
     // Spark 4 executes WITH RECURSIVE natively; the only knob is the
     // runaway-protection row limit, a resource bound not a dialect gap
-    Tables.createViews(spark, sfDir)
     val prev = spark.conf.getOption("spark.sql.cteRecursionRowLimit")
     spark.conf.set("spark.sql.cteRecursionRowLimit", 100000000L)
-    try {
-      val viaApi = SparkEntry.queries("q_khop_reach")(spark, sfDir)
-      val viaSql = spark.sql(SparkEntry.oracleSql("q_khop_reach"))
-      assert(viaApi.columns.toSeq == viaSql.columns.toSeq)
-      val a = viaApi.collect().map(_.toString).sorted
-      val b = viaSql.collect().map(_.toString).sorted
-      assert(a.length == b.length && a.sameElements(b), "q_khop_reach diverged")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.cteRecursionRowLimit", v)
-        case None => spark.conf.unset("spark.sql.cteRecursionRowLimit")
-      }
-      spark.catalog.clearCache()
+    try assertSqlParity(Seq("q_khop_reach"))(SparkEntry.oracleSql)
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.cteRecursionRowLimit", v)
+      case None => spark.conf.unset("spark.sql.cteRecursionRowLimit")
     }
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sinks.TxTable
@@ -114,22 +116,36 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("commitOnce: exactly one concurrent initializer wins; loser's staging is reclaimed immediately") {
-    val t = freshTable("once")
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
-    val threads = (0 until 3).map { w =>
-      new Thread(() => results.add(TxTable.commitOnce(frame(w * 100 until w * 100 + 10), t)))
+    // the DataFrame form, and the directory-writer form leaving a
+    // partitioned layout plus a non-parquet file
+    val forms: Seq[(String, (Int, String) => Boolean)] = Seq(
+      "once" -> ((w, t) => TxTable.commitOnce(frame(w * 100 until w * 100 + 10), t)),
+      "once_dir" -> ((w, t) => TxTable.commitOnce(spark, t) { path =>
+        frame(w * 100 until w * 100 + 10).withColumn("part", col("id") % 2)
+          .write.partitionBy("part").parquet(path)
+        Files.writeString(Paths.get(path, "side.bin"), s"writer $w")
+      }))
+    forms.foreach { case (tag, commit) =>
+      val t = freshTable(tag)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+      val threads = (0 until 3).map(w => new Thread(() => results.add(commit(w, t))))
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(results.asScala.count(identity) == 1, tag)
+      assert(TxTable.commits(spark, t).map(_.version) == Seq(0L), tag)
+      // losers cleaned up after themselves: only the winner's staging dir remains
+      val staged = new java.io.File(s"$t/data").listFiles().filter(_.isDirectory)
+      assert(staged.length == 1, tag)
+      // version 0 lists every data file under the winner's staging dir
+      val onDisk = Files.walk(staged.head.toPath).iterator().asScala.map(_.toFile)
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map(f => new java.io.File(t).toURI.relativize(f.toURI).getPath).toSet
+      assert(TxTable.files(spark, t).toSet == onDisk, tag)
+      if (tag == "once") assert(TxTable.read(spark, t).count() == 10)
+      else assert(Seq("side.bin", "part=0/", "part=1/").forall(k => onDisk.exists(_.contains(k))))
+      // a later commitOnce is a no-op without staging anything
+      assert(!commit(9, t), tag)
+      assert(new java.io.File(s"$t/data").listFiles().count(_.isDirectory) == 1, tag)
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    assert(results.asScala.count(identity) == 1)
-    assert(TxTable.commits(spark, t).map(_.version) == Seq(0L))
-    assert(TxTable.read(spark, t).count() == 10)
-    // losers cleaned up after themselves: only the winner's staging dir remains
-    val staged = new java.io.File(s"$t/data").listFiles().filter(_.isDirectory)
-    assert(staged.length == 1)
-    // a later commitOnce is a no-op without staging anything
-    assert(!TxTable.commitOnce(frame(0 until 5), t))
-    assert(new java.io.File(s"$t/data").listFiles().count(_.isDirectory) == 1)
   }
 
   test("empty table reads throw with the table named; asOf past a dropRemoved vacuum throws on read") {

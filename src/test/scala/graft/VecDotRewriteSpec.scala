@@ -51,12 +51,4 @@ class VecDotRewriteSpec extends SparkSpec {
         spark.experimental.extraOptimizations.filterNot(_ == VecDotRewrite)
     }
   }
-
-  test("GraftExtensions applies cleanly to an extensions container") {
-    // builder-level verification (a fresh session can't be created once
-    // the shared one exists); the injected pieces are each covered by
-    // the tests above and SimilaritySpec
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-  }
 }

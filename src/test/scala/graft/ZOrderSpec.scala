@@ -21,7 +21,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("zorder16 matches the per-bit reference through whole-stage codegen") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val cases = Seq((0L, 0L), (65535L, 65535L), (65535L, 0L), (0L, 65535L),
       (1L, 2L), (0x5555L, 0xaaaaL)) ++
