@@ -31,7 +31,7 @@ object Tables {
     * a rewritten part file inside a partition subdirectory re-keys the
     * memo (a direct child dir's name/length don't change on an
     * in-place rewrite). */
-  private def pathStamp(path: String): String = {
+  private[graft] def pathStamp(path: String): String = {
     val f = new java.io.File(path)
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)

@@ -135,16 +135,9 @@ trait ConditionalStore {
   * (whole object or nothing, never torn) genuinely holds. Used by the
   * fault-injection specs as the honest stand-in for S3. */
 final class LocalConditionalStore extends ConditionalStore {
-  def putIfNoneMatch(path: Path, content: Array[Byte]): Boolean = {
-    val dst = java.nio.file.Paths.get(path.toUri.getPath)
-    java.nio.file.Files.createDirectories(dst.getParent)
-    val tmp = java.nio.file.Files.createTempFile(dst.getParent, ".put-", ".tmp")
-    try {
-      java.nio.file.Files.write(tmp, content)
-      try { java.nio.file.Files.createLink(dst, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
+  // the link claim works on the local path alone and never uses its FileSystem
+  def putIfNoneMatch(path: Path, content: Array[Byte]): Boolean =
+    PosixLinkClaim.putIfAbsent(null, path, content)
 
   def get(path: Path): Option[Array[Byte]] = {
     val p = java.nio.file.Paths.get(path.toUri.getPath)

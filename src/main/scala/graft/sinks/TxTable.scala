@@ -1,9 +1,14 @@
 package graft.sinks
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.immutable.SortedMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -80,10 +85,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * pruning, decided from the O(1) manifest fold without touching even
   * the pruned files' footers. Pruning is strictly conservative: no
   * stats (legacy manifest, failed collection, all-null or non-primitive
-  * column, escape-bearing string bound, type mismatch) → the file is
-  * scanned. Checkpoints carry the folded stats verbatim, so skipping
-  * survives manifest cleanup; compaction's rewrite records fresh stats
-  * for the files it produces.
+  * column, type mismatch) → the file is scanned. The `stats=` JSON is
+  * written and read with Jackson, so string bounds holding quotes,
+  * backslashes or braces prune like any other. Checkpoints carry the
+  * folded stats verbatim, so skipping survives manifest cleanup;
+  * compaction's rewrite records fresh stats for the files it produces.
   *
   * At 100 TB: the log is one small file per commit and a reader lists
   * one directory — no data-file listing, no eventual-consistency
@@ -98,6 +104,14 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * or garbage checkpoint is skipped (older checkpoint, then the full
   * fold — checkpoints are pure acceleration, never a correctness
   * dependency). [[commits]] remains the O(commits) protocol view.
+  *
+  * Every operation lists `_txlog` once ([[openLog]], the only listing)
+  * and folds that listing at most once into one [[Snapshot]]: reads,
+  * pruning, the writer's schema check, its claim and its fence all
+  * answer from the same listing. Only a writer that loses a claim race,
+  * or folds a checkpoint after its commit, lists again. Whether a table
+  * is already written at all is one question, [[initialized]], asked by
+  * [[commitOnce]] and by sources.Landing alike.
   *
   * Crash recovery on stores whose claim is not content-atomic
   * (HDFS-like `create(overwrite=false)`): a claimant that dies between
@@ -118,7 +132,7 @@ object TxTable {
   private val Magic = "graft-txn-v1"
 
   /** A writer folds a checkpoint after every N commits (triggered
-    * best-effort from [[append]]; [[checkpoint]] is also public). */
+    * best-effort from [[append]]). */
   val CheckpointInterval = 10
 
   /** An unterminated manifest older than this is presumed crashed and
@@ -205,6 +219,12 @@ object TxTable {
     StructType(out.values.toSeq)
   }
 
+  /** Writes and reads the `stats=` lines. Unquoted `NaN`/`Infinity`
+    * are accepted because earlier manifests wrote doubles that way. */
+  private val Json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
   /** Per-file column stats from the parquet FOOTER (metadata-only —
     * no data pages read): one-line JSON of typed min/max per TOP-LEVEL
     * primitive column, merged across row groups. Typed so pruning
@@ -216,230 +236,202 @@ object TxTable {
   private def footerStats(spark: SparkSession, file: Path): Option[String] = try {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     val in = HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration)
     val reader = ParquetFileReader.open(in)
     try {
-      val md = reader.getFooter.getBlocks.asScala
-      // (tag, min, max) per column; None once any row group lacks stats
-      val acc = scala.collection.mutable.LinkedHashMap[String, Option[(Char, Any, Any)]]()
-      md.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          if (c.getPath.size == 1) {
-            val name = c.getPath.toDotString
-            val st = c.getStatistics
-            val pt = c.getPrimitiveType
-            val isUtf8 = pt.getPrimitiveTypeName == BINARY &&
-              pt.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType()
-            val tag: Option[Char] = pt.getPrimitiveTypeName match {
-              case INT32 | INT64 => Some('i')
-              case FLOAT | DOUBLE => Some('d')
-              case BINARY if isUtf8 => Some('s')
-              case _ => None
-            }
-            val valid = tag.isDefined && st != null && !st.isEmpty && st.hasNonNullValue
-            if (!valid) acc(name) = None
-            else if (!acc.contains(name) || acc(name).isDefined) {
-              val (mn, mx): (Any, Any) = tag.get match {
-                case 'i' => (st.genericGetMin match {
-                    case i: java.lang.Integer => i.longValue
-                    case l: java.lang.Long => l.longValue
-                  }, st.genericGetMax match {
-                    case i: java.lang.Integer => i.longValue
-                    case l: java.lang.Long => l.longValue
-                  })
-                case 'd' => (st.genericGetMin match {
-                    case f: java.lang.Float => f.doubleValue
-                    case d: java.lang.Double => d.doubleValue
-                  }, st.genericGetMax match {
-                    case f: java.lang.Float => f.doubleValue
-                    case d: java.lang.Double => d.doubleValue
-                  })
-                case 's' =>
-                  (st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                     .toStringUsingUTF8,
-                   st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                     .toStringUsingUTF8)
-              }
-              acc(name) = acc.get(name).flatten match {
-                case None => Some((tag.get, mn, mx))
-                case Some((t, pmn, pmx)) =>
-                  def lt(a: Any, b: Any): Boolean = (t: @unchecked) match {
-                    case 'i' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-                    case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
-                    case 's' => a.asInstanceOf[String] < b.asInstanceOf[String]
-                  }
-                  Some((t, if (lt(mn, pmn)) mn else pmn, if (lt(pmx, mx)) mx else pmx))
-              }
-            }
+      val chunks = reader.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala).filter(_.getPath.size == 1)
+      val out = Json.createObjectNode()
+      chunks.map(_.getPath.toDotString).distinct.foreach { name =>
+        val own = chunks.filter(_.getPath.toDotString == name)
+        val st = own.map(_.getStatistics)
+        if (st.forall(s => s != null && !s.isEmpty && s.hasNonNullValue)) {
+          // every row group's min and max: their min is the file's
+          // min, their max the file's max
+          val ends = st.flatMap(s => Seq[Any](s.genericGetMin, s.genericGetMax))
+          val pt = own.head.getPrimitiveType
+          pt.getPrimitiveTypeName match {
+            case INT32 | INT64 =>
+              val v = ends.map(_.asInstanceOf[Number].longValue)
+              out.putObject(name).put("t", "i").put("min", v.min).put("max", v.max)
+            case FLOAT | DOUBLE =>
+              val v = ends.map(_.asInstanceOf[Number].doubleValue)
+              out.putObject(name).put("t", "d")
+                .put("min", v.reduce(_ min _)).put("max", v.reduce(_ max _))
+            case BINARY if pt.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
+              val v = ends.map(_.asInstanceOf[Binary].toStringUsingUTF8)
+              out.putObject(name).put("t", "s").put("min", v.min).put("max", v.max)
+            case _ => ()
           }
         }
       }
-      def jstr(v: String): String =
-        "\"" + v.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
-      val fields = acc.collect { case (name, Some((t, mn, mx))) =>
-        def enc(v: Any): String = t match {
-          case 's' => jstr(v.asInstanceOf[String])
-          case _ => v.toString
-        }
-        s"${jstr(name)}:{" + "\"t\":\"" + t + "\",\"min\":" + enc(mn) +
-          ",\"max\":" + enc(mx) + "}"
-      }
-      if (fields.isEmpty) None else Some(fields.mkString("{", ",", "}"))
+      if (out.isEmpty) None else Some(Json.writeValueAsString(out))
     } finally reader.close()
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   private def parseSchema(json: String): Option[StructType] =
     try Some(DataType.fromJson(json).asInstanceOf[StructType])
     catch { case _: Exception => None } // tolerate foreign/corrupt lines
 
-  private def versionOf(name: String): Option[Long] =
-    if (name.endsWith(".txn")) name.stripSuffix(".txn").toLongOption else None
-
-  private def ckptVersionOf(name: String): Option[Long] =
-    if (name.endsWith(".ckpt")) name.stripSuffix(".ckpt").toLongOption else None
-
   private def txnName(v: Long): String = f"$v%020d.txn"
 
   private def ckptName(v: Long): String = f"$v%020d.ckpt"
 
-  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      in.readFully(0, buf)
-      buf
-    } finally in.close()
-  }
+  /** One fold of the log: the version it reached, its live files, the
+    * merged schema (if any commit recorded one) and the live files'
+    * `stats=` JSON. */
+  private final case class Snapshot(version: Long, files: Seq[String],
+      schema: Option[StructType], stats: Map[String, String])
 
-  /** All parseable commits, sorted — including any beyond a contiguity
-    * gap (callers that need a snapshot use [[commits]]). */
-  private def rawCommits(spark: SparkSession, table: String): Seq[Commit] = {
-    val dir = logDir(table)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(s => versionOf(s.getPath.getName).map(v => (v, s.getPath)))
-      .sortBy(_._1)
-      .flatMap { case (v, p) => parse(v, readBytes(fs, p)) }
-  }
+  /** One listing of `_txlog` — the `.txn` and `.ckpt` entries by
+    * version. Every operation opens the log once ([[openLog]]) and
+    * answers all of its questions from this value; only a writer that
+    * loses a claim race, or folds a checkpoint after its commit, opens
+    * it again. Manifests are read when a question needs them, never at
+    * listing time. */
+  private final class Log(val fs: FileSystem,
+      txns: SortedMap[Long, FileStatus], ckpts: SortedMap[Long, FileStatus]) {
 
-  /** All parseable checkpoint manifests, sorted (vacuum's reference
-    * view — after manifest cleanup a checkpoint may be live data's
-    * only surviving reference). */
-  private def rawCheckpoints(spark: SparkSession, table: String): Seq[Commit] = {
-    val dir = logDir(table)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(s => ckptVersionOf(s.getPath.getName).map(v => (v, s.getPath)))
-      .sortBy(_._1)
-      .flatMap { case (v, p) => parse(v, readBytes(fs, p)).filter(_.op == "checkpoint") }
-  }
+    /** Above every claimed commit AND checkpoint, so a claim never
+      * lands below a checkpoint whose manifests were cleaned away. */
+    val nextVersion: Long = (txns.keySet ++ ckpts.keySet).maxOption.fold(0L)(_ + 1)
 
-  /** The contiguous committed prefix 0..k — the snapshot a reader may
-    * trust. A gap (possible only on stores whose claim is not
-    * content-atomic, while the claimant is still writing) ends the
-    * snapshot before it. */
-  def commits(spark: SparkSession, table: String): Seq[Commit] = {
-    val raw = rawCommits(spark, table)
-    raw.zipWithIndex.takeWhile { case (c, i) => c.version == i.toLong }.map(_._1)
-  }
+    /** See [[TxTable.initialized]]. */
+    def initialized: Boolean = nextVersion > 0
 
-  /** The checkpoint-seeded fold: the newest parseable `.ckpt`
-    * at-or-below `asOf` seeds the live set and only the contiguous
-    * `.txn` tail above it is parsed, so a reader touches
-    * O(CheckpointInterval) manifests however long the table has lived.
-    * A torn checkpoint is skipped (next older, then the full fold —
-    * checkpoints are pure acceleration, never a correctness
-    * dependency). Returns (snapshot version, live files, effective
-    * merged schema); None = no committed state at-or-below `asOf`.
-    * Works after manifests below a checkpoint have been cleaned away
-    * (where the from-zero [[commits]] view goes empty). */
-  private def snapshotAt(spark: SparkSession, table: String,
-      asOf: Long = Long.MaxValue)
-      : Option[(Long, Seq[String], Option[StructType], Map[String, String])] = {
-    val dir = logDir(table)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return None
-    val entries = fs.listStatus(dir).toSeq
-    val ckpt = entries
-      .flatMap(s => ckptVersionOf(s.getPath.getName).map(v => (v, s.getPath)))
-      .filter(_._1 <= asOf).sortBy(-_._1)
-      .iterator
-      .flatMap { case (v, p) => parse(v, readBytes(fs, p)).filter(_.op == "checkpoint") }
-      .nextOption()
-    val live = scala.collection.mutable.LinkedHashSet[String](
-      ckpt.map(_.added).getOrElse(Seq.empty): _*)
-    val stats = scala.collection.mutable.LinkedHashMap[String, String](
-      ckpt.map(_.stats.toSeq).getOrElse(Seq.empty): _*)
-    var schema: Option[StructType] = ckpt.flatMap(_.schema).flatMap(parseSchema)
-    var version = ckpt.map(_.version).getOrElse(-1L)
-    var expect = version + 1
-    var contiguous = true
-    entries
-      .flatMap(s => versionOf(s.getPath.getName).map(v => (v, s.getPath)))
-      .filter { case (v, _) => v >= expect && v <= asOf }.sortBy(_._1)
-      .foreach { case (v, p) =>
-        if (contiguous && v == expect) parse(v, readBytes(fs, p)) match {
-          case Some(c) =>
-            live ++= c.added; live --= c.removed; version = v; expect += 1
-            stats ++= c.stats; c.removed.foreach(stats.remove)
-            c.schema.flatMap(parseSchema).foreach(n =>
-              schema = Some(schema.fold(n)(mergeSchema(_, n))))
-          case None => contiguous = false // claimant mid-write: snapshot ends here
-        }
-        else contiguous = false
+    private def parsed(entries: Iterable[(Long, FileStatus)]): Iterator[Commit] =
+      entries.iterator.flatMap { case (v, s) =>
+        val in = fs.open(s.getPath)
+        try parse(v, in.readAllBytes()) finally in.close()
       }
-    if (version < 0) None
-    else Some((version, live.toSeq, schema, stats.filter(kv => live(kv._1)).toMap))
-  }
 
-  /** Live table-relative files at `asOf` (default: latest) —
-    * checkpoint-first via [[snapshotAt]]. */
-  def files(spark: SparkSession, table: String, asOf: Long = Long.MaxValue): Seq[String] =
-    snapshotAt(spark, table, asOf).map(_._2).getOrElse(Seq.empty)
+    /** Every parseable commit, including any beyond a contiguity gap. */
+    def allCommits: Seq[Commit] = parsed(txns).toSeq
 
-  /** The snapshot's effective schema at `asOf` (merged over recorded
-    * commit schemas), if any commit in the snapshot recorded one. */
-  def schemaAt(spark: SparkSession, table: String,
-      asOf: Long = Long.MaxValue): Option[StructType] =
-    snapshotAt(spark, table, asOf).flatMap(_._3)
+    /** Every parseable checkpoint. */
+    def checkpoints: Seq[Commit] = parsed(ckpts).filter(_.op == "checkpoint").toSeq
 
+    /** The newest parseable checkpoint at-or-below `asOf`; a torn or
+      * garbage one is skipped for the next older. */
+    def newestCheckpoint(asOf: Long = Long.MaxValue): Option[Commit] =
+      parsed(ckpts.rangeTo(asOf).toSeq.reverse).find(_.op == "checkpoint")
 
-  /** The checkpoint-seeded snapshot head — [[snapshotAt]] at latest. */
-  private def snapshotState(spark: SparkSession, table: String): Option[(Long, Seq[String])] =
-    snapshotAt(spark, table).map { case (v, live, _, _) => (v, live) }
+    /** The contiguous parseable commits `from`, `from + 1`, ... up to
+      * `asOf`. A gap, or a manifest that does not parse (a claimant
+      * still writing, on stores whose claim is not content-atomic),
+      * ends the run. */
+    def run(from: Long, asOf: Long = Long.MaxValue): Iterator[Commit] =
+      parsed(txns.rangeFrom(from).rangeTo(asOf)).zipWithIndex
+        .takeWhile { case (c, i) => c.version == from + i }.map(_._1)
 
-  /** Folds the current contiguous snapshot into a write-once
-    * `<version>.ckpt` manifest (op=checkpoint, live files sorted —
-    * deterministic, so two racing checkpointers publish identical
-    * content and the lost race is indistinguishable from the win).
-    * Returns the checkpointed version; None on an empty table.
-    * Triggered best-effort from [[append]] every [[CheckpointInterval]]
-    * commits and safe to call any time — including after manifests
-    * below an older checkpoint have been cleaned away (the fold seeds
-    * from the newest checkpoint, not from version 0). */
-  def checkpoint(spark: SparkSession, table: String): Option[Long] = {
-    snapshotAt(spark, table).map { case (version, live, schema, stats) =>
-      // the folded schema AND per-file stats ride in the checkpoint so
-      // evolution and pruning survive manifest cleanup below it;
-      // deterministic from the prefix (stats strings carried verbatim,
-      // adds sorted), so racing checkpointers still publish identical
-      // bytes
-      tryPublish(spark, table, ckptName(version),
-        render("checkpoint", live.sorted, Seq.empty, schema.map(_.json), stats))
-      version
+    /** The checkpoint-seeded fold: the newest checkpoint at-or-below
+      * `asOf` seeds the live set, and only the contiguous `.txn` tail
+      * above it is parsed, so a reader touches O(CheckpointInterval)
+      * manifests however long the table has lived. None = no committed
+      * state at-or-below `asOf`. Works after manifests below a
+      * checkpoint have been cleaned away (where [[commits]] goes
+      * empty). */
+    def snapshot(asOf: Long = Long.MaxValue): Option[Snapshot] = {
+      val ckpt = newestCheckpoint(asOf)
+      val live = mutable.LinkedHashSet.from(ckpt.fold(Seq.empty[String])(_.added))
+      val stats = mutable.Map.from(ckpt.fold(Map.empty[String, String])(_.stats))
+      var schema = ckpt.flatMap(_.schema).flatMap(parseSchema)
+      var version = ckpt.fold(-1L)(_.version)
+      run(version + 1, asOf).foreach { c =>
+        live ++= c.added; live --= c.removed; version = c.version
+        stats ++= c.stats; c.removed.foreach(stats.remove)
+        c.schema.flatMap(parseSchema).foreach(n =>
+          schema = Some(schema.fold(n)(mergeSchema(_, n))))
+      }
+      if (version < 0) None
+      else Some(Snapshot(version, live.toSeq, schema, stats.filter(kv => live(kv._1)).toMap))
+    }
+
+    /** See [[TxTable.fenceStalled]]: only `.txn` versions above the
+      * newest checkpoint are candidates (anything at-or-below one was
+      * parseable when the checkpoint folded it), and only TTL-stale
+      * files are read. */
+    def fenceStalled(ttlMs: Long): Seq[Long] = {
+      val now = System.currentTimeMillis()
+      val above = newestCheckpoint().fold(0L)(_.version + 1)
+      txns.rangeFrom(above).toSeq.collect {
+        case (v, s) if now - s.getModificationTime > ttlMs && parsed(Seq(v -> s)).isEmpty =>
+          val out = fs.create(s.getPath, true)
+          try out.write(render("abort", Seq.empty, Seq.empty)) finally out.close()
+          v
+      }
     }
   }
+
+  /** The one listing of `<table>/_txlog`; a missing directory is an
+    * empty log. */
+  private def openLog(spark: SparkSession, table: String): Log = {
+    val dir = logDir(table)
+    val fs = fsOf(spark, dir)
+    val entries = try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil }
+    def byVersion(ext: String) = SortedMap.from(entries.flatMap { s =>
+      val name = s.getPath.getName
+      if (name.endsWith(ext)) name.stripSuffix(ext).toLongOption.map(_ -> s) else None
+    })
+    new Log(fs, byVersion(".txn"), byVersion(".ckpt"))
+  }
+
+  /** The log a writer claims from. On stores whose claim is NOT
+    * content-atomic its stalled claims are fenced first; on `file`
+    * (link-published) and conditional-PUT stores a torn manifest is
+    * impossible by protocol, so the scan is skipped. */
+  private def writerLog(spark: SparkSession, table: String): Log = {
+    val log = openLog(spark, table)
+    if (!Claims.forFs(log.fs).contentAtomic) log.fenceStalled(DefaultFenceTtlMs)
+    log
+  }
+
+  /** The snapshot at `asOf`; throws when it has no files (there is no
+    * schema to give an empty frame). */
+  private def committed(log: Log, table: String, asOf: Long): Snapshot = {
+    val snap = log.snapshot(asOf).filter(_.files.nonEmpty)
+    require(snap.nonEmpty, s"TxTable $table has no committed files" +
+      (if (asOf != Long.MaxValue) s" as of version $asOf" else ""))
+    snap.get
+  }
+
+  /** The contiguous committed prefix 0..k — the protocol view, one
+    * manifest per commit. A gap (possible only on stores whose claim
+    * is not content-atomic, while the claimant is still writing) ends
+    * it. */
+  def commits(spark: SparkSession, table: String): Seq[Commit] =
+    openLog(spark, table).run(0).toSeq
+
+  /** True iff any version or checkpoint is claimed — the write-once
+    * "already landed" test ([[commitOnce]], sources.Landing). It reads
+    * no manifest, so it stays true after manifests below a checkpoint
+    * are cleaned away (where [[commits]] goes empty) and while a
+    * claimant is still writing version 0; neither may let a second
+    * initializer re-claim version 0 (a silent lost write: the re-claim
+    * would "succeed" while its data stays invisible to the
+    * checkpoint-seeded read). */
+  def initialized(spark: SparkSession, table: String): Boolean =
+    openLog(spark, table).initialized
+
+  /** Live table-relative files at `asOf` (default: latest). */
+  def files(spark: SparkSession, table: String, asOf: Long = Long.MaxValue): Seq[String] =
+    openLog(spark, table).snapshot(asOf).fold(Seq.empty[String])(_.files)
+
+  /** Folds the current snapshot into a write-once `<version>.ckpt`
+    * manifest (op=checkpoint, live files sorted, stats lines carried
+    * verbatim — deterministic, so two racing checkpointers publish
+    * identical content and the lost race is indistinguishable from the
+    * win). The folded schema and stats ride in the checkpoint so
+    * evolution and pruning survive manifest cleanup below it. */
+  private def checkpoint(spark: SparkSession, table: String): Unit =
+    openLog(spark, table).snapshot().foreach { s =>
+      tryPublish(spark, table, ckptName(s.version),
+        render("checkpoint", s.files.sorted, Seq.empty, s.schema.map(_.json), s.stats))
+    }
 
   /** Gap fencing (crash recovery for non-content-atomic claims): any
     * manifest that does not parse and is older than `ttlMs` is a
@@ -455,63 +447,31 @@ object TxTable {
     * [[CreateNoOverwriteClaim]]'s post-close verify, and is impossible
     * on content-atomic claims, which skip fencing entirely).
     *
-    * Cost: only `.txn` versions ABOVE the newest checkpoint are
-    * candidates (anything at-or-below a checkpoint was parseable when
-    * the checkpoint folded it, so a gap there is impossible), and only
-    * TTL-stale files are read — O(CheckpointInterval) reads worst
-    * case, zero in a healthy table, never O(commits). Run by writers
-    * on non-content-atomic stores before claiming; returns the fenced
+    * Cost: O(CheckpointInterval) reads worst case, zero in a healthy
+    * table, never O(commits). Writers on non-content-atomic stores run
+    * it over the listing they claim from; returns the fenced
     * versions. */
   def fenceStalled(spark: SparkSession, table: String,
-      ttlMs: Long = DefaultFenceTtlMs): Seq[Long] = {
-    val dir = logDir(table)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return Seq.empty
-    val now = System.currentTimeMillis()
-    val entries = fs.listStatus(dir).toSeq
-    val newestCkpt = entries
-      .flatMap(s => ckptVersionOf(s.getPath.getName).map(v => (v, s.getPath)))
-      .sortBy(-_._1)
-      .iterator
-      .flatMap { case (v, p) => parse(v, readBytes(fs, p)).filter(_.op == "checkpoint") }
-      .nextOption().map(_.version).getOrElse(-1L)
-    entries
-      .flatMap(s => versionOf(s.getPath.getName).map(v => (v, s)))
-      .filter { case (v, s) => v > newestCkpt &&
-        now - s.getModificationTime > ttlMs &&
-        parse(v, readBytes(fs, s.getPath)).isEmpty }
-      .map { case (v, s) =>
-        val out = fs.create(s.getPath, true)
-        try out.write(render("abort", Seq.empty, Seq.empty)) finally out.close()
-        v
-      }
-      .sorted
-  }
+      ttlMs: Long = DefaultFenceTtlMs): Seq[Long] =
+    openLog(spark, table).fenceStalled(ttlMs)
+
+  /** Scans `files` of `snap`. The snapshot's merged schema (when
+    * recorded) drives the scan: by-name resolution, missing columns
+    * read as NULL — files that predate an added column stay readable,
+    * and nothing samples or merges parquet footers. Legacy logs
+    * without schema lines fall back to Spark's sample-file inference. */
+  private def scan(spark: SparkSession, table: String, snap: Snapshot,
+      files: Seq[String]): DataFrame =
+    snap.schema.fold(spark.read)(spark.read.schema(_)).parquet(files.map(f => s"$table/$f"): _*)
 
   /** Snapshot read — only files named by the contiguous committed
     * prefix, so concurrent writers/compactors are invisible and a torn
     * read is impossible. Throws on an empty snapshot (no schema to
     * give an empty frame). */
   def read(spark: SparkSession, table: String, asOf: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshotAt(spark, table, asOf)
-    val fs = snap.map(_._2).getOrElse(Seq.empty)
-    require(fs.nonEmpty, s"TxTable $table has no committed files" +
-      (if (asOf != Long.MaxValue) s" as of version $asOf" else ""))
-    // The snapshot's merged schema (when recorded) drives the scan:
-    // by-name resolution, missing columns read as NULL — files that
-    // predate an added column stay readable, and nothing samples or
-    // merges parquet footers. Legacy logs without schema lines fall
-    // back to Spark's sample-file inference.
-    val reader = snap.flatMap(_._3)
-      .map(spark.read.schema(_)).getOrElse(spark.read)
-    reader.parquet(fs.map(f => s"$table/$f"): _*)
+    val snap = committed(openLog(spark, table), table, asOf)
+    scan(spark, table, snap, snap.files)
   }
-
-  /** The snapshot's per-file stats map (table-relative path → typed
-    * min/max JSON), as folded from manifests + checkpoints. */
-  def statsAt(spark: SparkSession, table: String,
-      asOf: Long = Long.MaxValue): Map[String, String] =
-    snapshotAt(spark, table, asOf).map(_._4).getOrElse(Map.empty)
 
   /** Data-skipping read — the manifest-stats half of the lakehouse
     * design ([[read]]'s schema-in-log being the other): semantically
@@ -529,91 +489,40 @@ object TxTable {
     * exposes the kept list for plan audits. */
   def readPruned(spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any, asOf: Long = Long.MaxValue): DataFrame = {
-    val kept = prunedFiles(spark, table, column, lo, hi, asOf)
-    require(kept.nonEmpty || files(spark, table, asOf).nonEmpty,
-      s"TxTable $table has no committed files")
-    val schema = snapshotAt(spark, table, asOf).flatMap(_._3)
+    val snap = committed(openLog(spark, table), table, asOf)
+    val kept = prune(snap, column, lo, hi)
     val base =
-      if (kept.isEmpty) {
-        // every file pruned: an empty frame in the snapshot's schema
-        val sch = schema.getOrElse(read(spark, table, asOf).schema)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      } else {
-        val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-        reader.parquet(kept.map(f => s"$table/$f"): _*)
-      }
+      if (kept.nonEmpty) scan(spark, table, snap, kept)
+      else // every file pruned: an empty frame in the snapshot's schema
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          snap.schema.getOrElse(scan(spark, table, snap, snap.files).schema))
     base.filter(col(column).between(lit(lo), lit(hi)))
   }
 
   /** The file subset [[readPruned]] would scan. */
   def prunedFiles(spark: SparkSession, table: String, column: String,
-      lo: Any, hi: Any, asOf: Long = Long.MaxValue): Seq[String] = {
-    val snap = snapshotAt(spark, table, asOf)
-    val live = snap.map(_._2).getOrElse(Seq.empty)
-    val stats = snap.map(_._4).getOrElse(Map.empty)
-    live.filter { f =>
-      stats.get(f).flatMap(colBounds(_, column)) match {
-        case None => true // no usable stats: never prune
-        case Some((tag, mn, mx)) => overlaps(tag, mn, mx, lo, hi)
-      }
-    }
-  }
+      lo: Any, hi: Any, asOf: Long = Long.MaxValue): Seq[String] =
+    openLog(spark, table).snapshot(asOf).fold(Seq.empty[String])(prune(_, column, lo, hi))
 
-  /** Extracts column `c`'s (tag, min, max) from a stats JSON line —
-    * a tiny regex-free scan of the flat one-level format [[footerStats]]
-    * writes; returns None on anything unexpected (→ no pruning). */
-  private def colBounds(json: String, c: String): Option[(Char, String, String)] = try {
-    val key = "\"" + c + "\":{"
-    val i = json.indexOf(key)
-    if (i < 0) None
-    else {
-      val obj = json.substring(i + key.length, json.indexOf('}', i))
-      def field(k: String): Option[String] = {
-        val j = obj.indexOf("\"" + k + "\":")
-        if (j < 0) None
-        else {
-          val from = j + k.length + 3
-          val end = {
-            var d = from; var inStr = obj.charAt(from) == '"'
-            if (inStr) { d += 1; while (obj.charAt(d) != '"' || obj.charAt(d - 1) == '\\') d += 1; d + 1 }
-            else { while (d < obj.length && obj.charAt(d) != ',') d += 1; d }
-          }
-          Some(obj.substring(from, end))
-        }
-      }
-      for { t <- field("t"); mn <- field("min"); mx <- field("max") }
-        yield (t.charAt(1), mn, mx)
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
+  private def prune(snap: Snapshot, column: String, lo: Any, hi: Any): Seq[String] =
+    snap.files.filter(f => snap.stats.get(f).forall(overlaps(_, column, lo, hi)))
 
-  private def overlaps(tag: Char, mnS: String, mxS: String, lo: Any, hi: Any): Boolean = try {
-    tag match {
-      case 'i' | 'd' =>
-        def num(a: Any): Option[BigDecimal] = a match {
-          case n: Number => Some(BigDecimal(n.toString))
-          case _ => None
-        }
-        (num(lo), num(hi)) match {
-          case (Some(l), Some(h)) =>
-            val mn = BigDecimal(mnS); val mx = BigDecimal(mxS)
-            !(mx < l || mn > h)
-          case _ => true // non-numeric bounds against numeric stats: keep
-        }
-      case 's' =>
-        (lo, hi) match {
-          // any escape in the recorded bound → comparing the raw JSON
-          // text could prune a MATCHING file; keep it instead (pruning
-          // must only ever be conservative)
-          case (_, _) if mnS.contains('\\') || mxS.contains('\\') => true
-          case (l: String, h: String) =>
-            val mn = mnS.stripPrefix("\"").stripSuffix("\"")
-            val mx = mxS.stripPrefix("\"").stripSuffix("\"")
-            !(mx < l || mn > h)
-          case _ => true
-        }
+  /** False only when `stats` (one file's stats line) proves no value
+    * of `column` in the file lies in [lo, hi]. No stats for the
+    * column, bounds of another type, or anything unexpected keep the
+    * file. */
+  private def overlaps(stats: String, column: String, lo: Any, hi: Any): Boolean = try {
+    val c = Json.readTree(stats).path(column)
+    val (mn, mx) = (c.path("min"), c.path("max"))
+    (c.path("t").asText, lo, hi) match {
+      case ("i" | "d", l: Number, h: Number) if mn.isNumber && mx.isNumber =>
+        def dec(n: Number) = new java.math.BigDecimal(n.toString)
+        mx.decimalValue.compareTo(dec(l)) >= 0 && mn.decimalValue.compareTo(dec(h)) <= 0
+      case ("s", l: String, h: String) if mn.isTextual && mx.isTextual =>
+        mx.asText >= l && mn.asText <= h
       case _ => true
     }
-  } catch { case scala.util.control.NonFatal(_) => true }
+  } catch { case NonFatal(_) => true }
 
   /** Atomic publish of `content` at version `v`. True = this writer
     * owns the version. */
@@ -635,27 +544,6 @@ object TxTable {
     val fs = fsOf(spark, dir)
     fs.mkdirs(dir)
     Claims.forFs(fs).putIfAbsent(fs, new Path(dir, name), content)
-  }
-
-  /** Fence stalls iff the scheme's claim is NOT content-atomic —
-    * on `file` (link-published) and conditional-PUT stores a torn
-    * manifest is impossible by protocol, so writers skip the scan
-    * entirely. */
-  private def fenceIfNeeded(spark: SparkSession, table: String): Unit = {
-    val fs = fsOf(spark, logDir(table))
-    if (!Claims.forFs(fs).contentAtomic) fenceStalled(spark, table)
-  }
-
-  private def nextVersion(spark: SparkSession, table: String): Long = {
-    val dir = logDir(table)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).toSeq
-      .flatMap { s =>
-        val n = s.getPath.getName
-        versionOf(n).orElse(ckptVersionOf(n))
-      }
-      .reduceOption(_ max _).map(_ + 1).getOrElse(0L)
   }
 
   /** Runs `write` into a fresh writer-private directory; returns it
@@ -696,25 +584,25 @@ object TxTable {
   private[graft] def stagingDirOf(file: String): String =
     file.split('/').take(2).mkString("/")
 
-  /** Transactional append: stage, then claim the next version (re-list
-    * and re-claim on a lost race — the staged files are reused).
-    * Returns the committed version. Safe under any number of
-    * concurrent appenders: each one's rows land in exactly one
-    * committed version. */
+  /** Transactional append: stage, then claim the next version of the
+    * log read before staging (re-open the log and re-claim on a lost
+    * race — the staged files are reused). Returns the committed
+    * version. Safe under any number of concurrent appenders: each
+    * one's rows land in exactly one committed version. */
   def append(df: DataFrame, table: String, maxRetries: Int = 100): Long = {
     val spark = df.sparkSession
-    fenceIfNeeded(spark, table)
+    var log = writerLog(spark, table)
     // Refuse an append whose schema cannot merge with the table's
     // (type changed in place) BEFORE staging — a claim-time race can
     // still slip a conflicting pair through, so read() re-validates
     // when it folds (defense in depth), but the common failure is
     // caught at the writer with the writer's stack.
-    schemaAt(spark, table).foreach(existing => mergeSchema(existing, df.schema))
+    log.snapshot().flatMap(_.schema).foreach(mergeSchema(_, df.schema))
     val (rel, added, stats) = stage(spark, table)(parquetWriter(df))
     val content = render("append", added, Seq.empty, Some(df.schema.json), stats)
     var attempt = 0
     while (attempt < maxRetries) {
-      val v = nextVersion(spark, table)
+      val v = log.nextVersion
       if (tryClaim(spark, table, v, content)) {
         // best-effort: the append IS committed at this point — a
         // failed checkpoint must not make a successful commit look
@@ -725,6 +613,7 @@ object TxTable {
         return v
       }
       attempt += 1
+      log = writerLog(spark, table)
     }
     // reclaim our own staging before surfacing the failure — the same
     // cleanup replaceCompact/commitOnce do on a lost race (ADVICE r10)
@@ -746,18 +635,10 @@ object TxTable {
     * [[readPruned]] uses, are collected for a frame with a `schema`;
     * a directory landing is read back by its own format's reader and
     * skips the footer reads (about 12 ms per parquet file on a
-    * 4-core host). */
+    * 4-core host). A table already [[initialized]] stages nothing. */
   def commitOnce(spark: SparkSession, table: String, schema: Option[StructType] = None)(
       write: String => Unit): Boolean = {
-    fenceIfNeeded(spark, table)
-    // initialized = ANY claimed version or checkpoint exists (that is
-    // exactly nextVersion > 0) — the from-zero commits() view goes
-    // empty after manifests below a checkpoint are cleaned away, and a
-    // mid-write claimant's v0 is still a claim; neither must let a
-    // second initializer re-claim version 0 (ADVICE r11: a silent lost
-    // write — the re-claim would "succeed" while its data stays
-    // invisible to the checkpoint-seeded read).
-    if (nextVersion(spark, table) > 0) return false
+    if (writerLog(spark, table).initialized) return false
     val (rel, added, stats) = stage(spark, table, footers = schema.nonEmpty)(write)
     val won = tryClaim(spark, table, 0L,
       render("append", added, Seq.empty, schema.map(_.json), stats))
@@ -774,32 +655,27 @@ object TxTable {
     * current snapshot into `nOut` files. Returns the commit version. */
   def replaceCompact(spark: SparkSession, table: String, nOut: Int,
       maxRetries: Int = 20, sortBy: Seq[String] = Nil): Long = {
-    fenceIfNeeded(spark, table)
     var attempt = 0
     while (attempt < maxRetries) {
-      // snapshot head from the checkpoint-seeded fold, NOT the
-      // from-zero commits() view — the latter goes empty after
-      // manifests below a checkpoint are cleaned away, which made
-      // compaction throw "nothing to compact" on a healthy table
-      // (ADVICE r11)
-      val snap = snapshotState(spark, table)
-      require(snap.nonEmpty, s"TxTable $table is empty; nothing to compact")
-      val (snapV, current) = snap.get
+      // the checkpoint-seeded snapshot head, NOT the from-zero
+      // commits() view — the latter goes empty after manifests below a
+      // checkpoint are cleaned away (ADVICE r11)
+      val snap = committed(writerLog(spark, table), table, Long.MaxValue)
       // sortBy = CLUSTERED compaction: range-partition + sort the
       // rewrite so each output file covers a tight, near-disjoint
       // range of the sort key and the fresh footer stats make
       // [[readPruned]] effective again — an unsorted repartition mixes
       // every file's range to the full domain and data skipping
       // degrades to scan-everything after compaction.
-      val base = read(spark, table, snapV)
+      val base = scan(spark, table, snap, snap.files)
       val compacted =
         if (sortBy.isEmpty) base.repartition(nOut)
         else base.repartitionByRange(nOut, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
       val (rel, added, stats) = stage(spark, table)(parquetWriter(compacted))
-      if (tryClaim(spark, table, snapV + 1,
-          render("replace", added, current, Some(compacted.schema.json), stats)))
-        return snapV + 1
+      if (tryClaim(spark, table, snap.version + 1,
+          render("replace", added, snap.files, Some(compacted.schema.json), stats)))
+        return snap.version + 1
       // a concurrent commit interleaved: our snapshot (and removal
       // set) is stale — drop the staged copy and retry from fresh
       unstage(spark, table, rel)
@@ -818,13 +694,13 @@ object TxTable {
     * the deleted directory/file names. */
   def vacuum(spark: SparkSession, table: String, ttlMs: Long,
       dropRemoved: Boolean = false): Seq[String] = {
-    val all = rawCommits(spark, table)
+    val log = openLog(spark, table)
+    val all = log.allCommits
     // the referenced set must ALSO cover checkpoint manifests: after
     // .txn manifests at-or-below a checkpoint are cleaned away, live
     // data's ONLY surviving reference is the .ckpt — omitting it made
     // vacuum delete live data (ADVICE r11, high)
-    val ckptAdds = rawCheckpoints(spark, table).flatMap(_.added)
-    val referenced = (all.flatMap(c => c.added ++ c.removed) ++ ckptAdds)
+    val referenced = (all.flatMap(c => c.added ++ c.removed) ++ log.checkpoints.flatMap(_.added))
       .map(f => stagingDirOf(f).stripPrefix("data/")).toSet
     val dataDir = new Path(table, "data")
     val fs = fsOf(spark, dataDir)
@@ -838,7 +714,7 @@ object TxTable {
     val droppedFiles =
       if (!dropRemoved) Seq.empty
       else {
-        val live = files(spark, table).toSet
+        val live = log.snapshot().fold(Set.empty[String])(_.files.toSet)
         val removed = all.flatMap(_.removed).distinct.filterNot(live)
         removed.filter(f => fs.delete(new Path(s"$table/$f"), false))
       }

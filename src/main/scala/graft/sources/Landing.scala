@@ -28,13 +28,16 @@ import graft.sinks.TxTable
   * follows the claim — no reader observes a half-written or doubly
   * written directory.
   *
-  * The key folds in a SOURCE-DATA FINGERPRINT (name+size+mtime of every
-  * file under sfDir, one level deep) so a regenerated corpus at the
-  * same path invalidates the artifact automatically: the old failure
-  * mode was a stale artifact from a prior corpus silently served to the
-  * consumer queries while their oracles computed fresh from the new
-  * data. Metadata-only, so the fingerprint costs microseconds — no
-  * content read, no Spark job.
+  * The key folds in a SOURCE-DATA FINGERPRINT, the MD5 of sfDir's
+  * `Tables.pathStamp` (name, size and mtime of every entry, one level
+  * deep — the same stamp that guards the Tables memo), so a
+  * regenerated corpus at the same path invalidates the artifact
+  * automatically: the old failure mode was a stale artifact from a
+  * prior corpus silently served to the consumer queries while their
+  * oracles computed fresh from the new data. Any regeneration, even
+  * same-size, bumps an mtime and re-keys the landing. Metadata-only,
+  * so the fingerprint costs microseconds — no content read, no Spark
+  * job.
   */
 object Landing {
 
@@ -69,30 +72,11 @@ object Landing {
     timings.clear()
   }
 
-  /** Hex digest of (name, length, mtime) for every file under `sfDir`,
-    * one level deep (the testdata tables are flat parquet files; a
-    * directory entry contributes its own mtime plus its children's).
-    * Stable across JVMs for an unchanged corpus; any regeneration —
-    * even same-size — bumps mtime and re-keys the landing. */
-  private def fingerprint(sfDir: String): String = {
-    def entries(f: java.io.File): Seq[String] = {
-      val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).sortBy(_.getName)
-      kids.flatMap { k =>
-        if (k.isFile) Seq(s"${k.getName}:${k.length}:${k.lastModified}")
-        else s"${k.getName}/:${k.lastModified}" +: Option(k.listFiles())
-          .map(_.toSeq).getOrElse(Seq.empty).sortBy(_.getName)
-          .filter(_.isFile).map(g => s"${k.getName}/${g.getName}:${g.length}:${g.lastModified}")
-      }
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    entries(new java.io.File(sfDir)).foreach(e => md.update(e.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
   /** Returns the landing directory for (sfDir, kind) — the staging
     * directory committed as version 0 — running `write` into a fresh
-    * staging directory first iff no version 0 is committed for the
-    * CURRENT corpus content yet. Landing under a NEW fingerprint first
+    * staging directory first iff no version is claimed
+    * ([[graft.sinks.TxTable.initialized]]) for the CURRENT corpus
+    * content yet. Landing under a NEW fingerprint first
     * deletes every sibling directory for the same sfDir with a
     * different fingerprint: a regenerated corpus re-keys the landing
     * (the r5 staleness fix), and without the sweep each regeneration
@@ -113,12 +97,12 @@ object Landing {
     land(spark, sfDir, kind)(TxTable.commitOnce(write, _))
 
   /** The landing path for (sfDir, kind), running the landing `commit`
-    * (timed) first iff no version 0 is committed there yet. */
+    * (timed) first iff the table there is not yet initialized. */
   private def land(spark: SparkSession, sfDir: String, kind: String)(
       commit: String => Boolean): String = synchronized {
     val path = keyedPath(sfDir, kind)
     if (!landed(path)) {
-      if (TxTable.commits(spark, path).isEmpty) timed(kind)(commit(path))
+      if (!TxTable.initialized(spark, path)) timed(kind)(commit(path))
       landed += path
     }
     path
@@ -131,7 +115,7 @@ object Landing {
   def tableIfLanded(spark: SparkSession, sfDir: String,
       kind: String): Option[String] = synchronized {
     val path = keyedPath(sfDir, kind)
-    if (landed(path) || graft.sinks.TxTable.files(spark, path).nonEmpty) {
+    if (landed(path) || TxTable.initialized(spark, path)) {
       landed += path
       Some(path)
     } else None
@@ -145,10 +129,10 @@ object Landing {
     // one corpus's stale-fingerprint sweep delete the other's LIVE
     // artifacts. Folding a hash of the RAW path into the prefix makes
     // the sweep scope exactly one corpus path.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val pathHash = md.digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val safe = s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}.$pathHash"
-    val fpDir = s"$safe-${fingerprint(sfDir)}"
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val safe = s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}.${md5(sfDir).take(8)}"
+    val fpDir = s"$safe-${md5(graft.Tables.pathStamp(sfDir)).take(16)}"
     val root = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_landing")
     // Sweep stale-fingerprint siblings of THIS corpus path only, and
     // age-gate on the directory's own mtime: `synchronized` is

@@ -6,9 +6,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
 /** A Hadoop FileSystem registered under a NON-default `mock://` scheme
-  * (local-disk backed), with rename/delete call instrumentation. The
-  * sinks claim "any object store via `fs.<scheme>.impl` config, no code
-  * change"; exercising them over `mock://` proves the claim beyond
+  * (local-disk backed), with rename/delete/log-listing instrumentation.
+  * The sinks claim "any object store via `fs.<scheme>.impl` config, no
+  * code change"; exercising them over `mock://` proves the claim beyond
   * `file://` — every Path round-trips through scheme resolution — and
   * the counters pin the rename-NOT-copy assumption (the one S3A breaks:
   * its "rename" is a server-side copy+delete, so a sink relying on
@@ -26,12 +26,18 @@ class MockFs extends RawLocalFileSystem {
     MockFs.deletes.incrementAndGet()
     super.delete(p, recursive)
   }
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (p.getName == "_txlog") MockFs.txlogListings.incrementAndGet()
+    super.listStatus(p)
+  }
 }
 
 object MockFs {
   val renames = new AtomicInteger(0)
   val deletes = new AtomicInteger(0)
-  def reset(): Unit = { renames.set(0); deletes.set(0) }
+  /** Listings of a TxTable log directory. */
+  val txlogListings = new AtomicInteger(0)
+  def reset(): Unit = { renames.set(0); deletes.set(0); txlogListings.set(0) }
 }
 
 /** Local-backed FS under a dedicated `cond://` scheme for the

@@ -65,5 +65,8 @@ class SessionsSpec extends SparkSpec {
     check("src", """SparkSession\.builder""", "Sessions.scala")
     check("src", """GraftFunctions\.register""", "Sessions.scala", "Tables.scala", "VecDot.scala")
     check("src/main", "_LANDED")
+    // one corpus stamp, one owner of the log layout
+    check("src/main", """\$\{\w+\.length\}:\$\{\w+\.lastModified\}""", "Tables.scala")
+    check("src/main", "_txlog", "TxTable.scala")
   }
 }

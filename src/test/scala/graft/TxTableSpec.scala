@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.TxTable
+import graft.sinks.{Claims, PosixLinkClaim, TxTable}
 
 /** Commit-log table protocol: multi-writer safety, torn-read
   * impossibility, crashed-writer reclamation, transactional
@@ -362,6 +362,68 @@ class TxTableSpec extends SparkSpec {
     assert(TxTable.prunedFiles(spark, t, "id", 5000L, 6000L).isEmpty)
     val empty = TxTable.readPruned(spark, t, "id", 5000L, 6000L)
     assert(empty.columns.toSeq == Seq("id", "payload") && empty.count() == 0)
+  }
+
+  test("data skipping: string stats holding quotes, backslashes and braces prune exactly") {
+    import spark.implicits._
+    val t = freshTable("skipesc")
+    val groups = Seq("a", "b", "c").map(p => Seq(p + "\"1", p + "\\2", p + "}3"))
+    groups.zipWithIndex.foreach { case (vs, i) =>
+      TxTable.append(vs.map(v => (i.toLong, v)).toDF("id", "s").coalesce(1), t)
+    }
+    val (lo, hi) = ("b\"", "b}~")
+    // files a and c lie wholly outside the bound
+    assert(TxTable.prunedFiles(spark, t, "s", lo, hi).length == 1)
+    def values(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(1)).sorted.toSeq
+    val got = values(TxTable.readPruned(spark, t, "s", lo, hi))
+    assert(got == values(TxTable.read(spark, t).filter(col("s").between(lo, hi))))
+    assert(got == groups(1).sorted)
+  }
+
+  test("data skipping: stats lines in the earlier hand-written JSON prune the same files") {
+    import spark.implicits._
+    val t = freshTable("skipjson")
+    (0 until 3).foreach { i =>
+      TxTable.append((i * 100 until (i + 1) * 100)
+        .map(j => (j.toLong, s"row_$j", j * 1e8)).toDF("id", "payload", "score").coalesce(1), t)
+    }
+    val probes = Seq(("id", 150L, 160L), ("payload", "row_0", "row_0"), ("score", 2.5e10, 2.6e10))
+    def kept() = probes.map { case (c, lo, hi) => TxTable.prunedFiles(spark, t, c, lo, hi) }
+    val before = kept()
+    assert(before.map(_.length) == Seq(1, 1, 1))
+    // stats= JSON exactly as manifests written before Jackson carried it
+    val legacy = Seq(
+      """{"id":{"t":"i","min":0,"max":99},"payload":{"t":"s","min":"row_0","max":"row_99"},""" +
+        """"score":{"t":"d","min":0.0,"max":9.9E9}}""",
+      """{"id":{"t":"i","min":100,"max":199},"payload":{"t":"s","min":"row_100","max":"row_199"},""" +
+        """"score":{"t":"d","min":1.0E10,"max":1.99E10}}""",
+      """{"id":{"t":"i","min":200,"max":299},"payload":{"t":"s","min":"row_200","max":"row_299"},""" +
+        """"score":{"t":"d","min":2.0E10,"max":2.99E10}}""")
+    val manifests = new java.io.File(s"$t/_txlog").listFiles()
+      .filter(_.getName.endsWith(".txn")).sortBy(_.getName)
+    manifests.zip(legacy).foreach { case (f, json) =>
+      val lines = Files.readAllLines(f.toPath).asScala.map(l =>
+        if (l.startsWith("stats=")) l.takeWhile(_ != '\t') + "\t" + json else l)
+      Files.write(f.toPath, lines.asJava)
+    }
+    assert(kept() == before)
+  }
+
+  test("each operation lists the log once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.mock.impl", classOf[MockFs].getName)
+    Claims.register("mock", PosixLinkClaim)
+    try {
+      val local = Files.createTempDirectory("graft_tx_listings_")
+      Files.delete(local)
+      val t = s"mock://$local"
+      (0 until 3).foreach(i => TxTable.append(frame(i * 100 until (i + 1) * 100).coalesce(1), t))
+      def listings(op: => Any): Int = { MockFs.reset(); op; MockFs.txlogListings.get }
+      assert(listings(TxTable.read(spark, t)) == 1)
+      assert(listings(TxTable.readPruned(spark, t, "id", 150L, 160L)) == 1)
+      assert(listings(TxTable.readPruned(spark, t, "id", 5000L, 6000L)) == 1)
+      assert(listings(TxTable.append(frame(300 until 310), t)) == 1) // v3: no checkpoint
+      assert(listings(TxTable.commitOnce(frame(0 until 1), t)) == 1)
+    } finally Claims.unregister("mock")
   }
 
   test("data skipping: stats survive checkpoint folding + manifest cleanup; compaction refreshes them") {
