@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.ComponentsAggregator
 
 /** Near-duplicate CLUSTERING: the step after pair detection that an
   * actual training-data dedup pipeline needs — group transitive
@@ -11,86 +12,34 @@ import org.apache.spark.sql.functions._
   * idempotence of app.py:270-273 picks one winner per filename; here
   * the "filename" is a similarity cluster).
   *
-  * Algorithm: iterative min-label propagation with pointer jumping.
-  * Each iteration does (a) one hop of neighbor-label propagation and
-  * (b) one label-of-label shortcut (path compression), giving
-  * O(log diameter) convergence instead of O(diameter) — the property
-  * that matters when a boilerplate cluster chains thousands of docs.
-  * All per-iteration state is (doc_id, label) pairs: bytes shuffled
-  * scale with cluster membership, never with pair count squared, and
-  * each iteration's result is `localCheckpoint()`ed: a plain
-  * `persist()` caches the DATA but the logical plan still compounds
-  * ~6× per iteration (every analysis/explain walks it — measured OOM
-  * at 8 iterations), while a checkpoint truncates the lineage to a
-  * `LogicalRDD` leaf so iteration N's plan is constant-size. On a
-  * fault-tolerant cluster run, prefer reliable `checkpoint()` with a
-  * checkpoint dir — localCheckpoint trades executor-loss recovery for
-  * speed, the right trade in a single-JVM deployment.
+  * Algorithm: one typed aggregate, [[graft.functions.ComponentsAggregator]]
+  * — the local-then-global connected components of Kiveris et al.
+  * (SoCC 2014). Each input partition folds its pairs into a local
+  * union-find forest; one final task unions the partitions' forests
+  * and emits (doc_id, min-id root, component size) for every node.
+  * A boilerplate cluster that chains thousands of docs costs the same
+  * jobs as a single pair: the job count never depends on the diameter.
   *
-  * Convergence is detected with a count of changed labels — a driver
-  * action per iteration, which is how every iterative-graph Spark
-  * algorithm (GraphX/GraphFrames connected components included)
-  * terminates; the data never collects.
+  * Scale shape: the pair stream is read once; at most one forest per
+  * input partition crosses the shuffle, and each forest holds only its
+  * partition's nodes. Memory bound: the final merge task holds one
+  * (node, parent) entry per distinct near-dup node — never a pair
+  * count, never the corpus.
   */
 object DedupClusters {
 
   /** Pairs → (doc_id, canonical_id, cluster_size, is_canonical) for
-    * every doc that belongs to a near-dup cluster. Canonical = min
-    * doc_id reachable through the pair graph (deterministic, and the
-    * usual "keep the earliest-ingested copy" policy). */
-  private[graft] def connectedComponents(rawPairs: DataFrame): DataFrame = {
-    // The pair-detection plan upstream (LSH + verify) is the expensive
-    // part; nodes/edges/labels below each reference it, so materialize
-    // it ONCE — otherwise the whole near-dup plan re-runs ~6× before
-    // the first iteration even starts (measured: 7.1 s → dominated by
-    // recompute, not by the propagation itself).
-    val pairs = rawPairs.localCheckpoint()
-    // Undirected edges PLUS a self-loop per node: the self-loop makes
-    // the per-node neighbor-min aggregate include the node's own label,
-    // so the iteration needs no union inside the loop (a union over
-    // checkpointed frames trips Catalyst's constraint rewrite — the
-    // checkpointed LogicalRDD preserves constraints that mention
-    // pre-checkpoint attribute ids).
-    val nodes = pairs.select(col("doc_a").as("s"))
-      .union(pairs.select(col("doc_b").as("s"))).distinct()
-    val edges = pairs.select(col("doc_a").as("s"), col("doc_b").as("t"))
-      .union(pairs.select(col("doc_b").as("s"), col("doc_a").as("t")))
-      .union(nodes.select(col("s"), col("s").as("t")))
-      .localCheckpoint()
-    var labels = nodes.select(col("s").as("d"))
-      .withColumn("lbl", col("d")).localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
-      // (a) min over own + neighbor labels (self-loops carry "own").
-      // NOT checkpointed: its inputs (edges, labels) are already
-      // LogicalRDD leaves, so the self-join below re-evaluating it
-      // twice costs one extra small join — cheaper than the extra
-      // materialization job per iteration (the loop runs on the
-      // near-dup node set, where per-job latency dominates; measured
-      // 1.94 s → 1.45 s for the whole loop at sf0.1).
-      val hop = edges.join(labels, edges("s") === labels("d"))
-        .groupBy(edges("t")).agg(min("lbl").as("lbl"))
-        .select(col("t").as("d"), col("lbl"))
-      // (b) pointer jumping: follow your label's label; carry the
-      // change flag INTO the checkpointed frame so the convergence
-      // count scans the materialized leaf instead of re-joining.
-      val next = hop.as("x")
-        .join(hop.as("y"), col("x.lbl") === col("y.d"), "left")
-        .select(col("x.d").as("d"),
-          least(col("x.lbl"), coalesce(col("y.lbl"), col("x.lbl"))).as("lbl"))
-        .join(labels.withColumnRenamed("lbl", "old"), "d")
-        .select(col("d"), col("lbl"), (col("lbl") < col("old")).as("chg"))
-        .localCheckpoint()
-      val changed = next.filter(col("chg")).count()
-      labels = next.select("d", "lbl")
-      converged = changed == 0
-      iter += 1
-    }
-    val sized = labels
-      .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy("lbl")))
-    sized.select(col("d").as("doc_id"), col("lbl").as("canonical_id"),
-        col("cluster_size"), (col("d") === col("lbl")).as("is_canonical"))
+    * every doc that belongs to a near-dup cluster, ordered by doc_id.
+    * Canonical = min doc_id reachable through the pair graph
+    * (deterministic, and the usual "keep the earliest-ingested copy"
+    * policy). */
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]
+      .select(ComponentsAggregator.toColumn.name("cc"))
+      .select(inline(col("cc")))
+      .select(col("_1").as("doc_id"), col("_2").as("canonical_id"),
+        col("_3").as("cluster_size"), (col("_1") === col("_2")).as("is_canonical"))
       .orderBy("doc_id")
   }
 
@@ -200,13 +149,13 @@ object DedupClusters {
   private[graft] def clustersFromExactPairs(spark: SparkSession, d: String): DataFrame =
     connectedComponents(Quality.exactJaccardPairs(spark, d).select("doc_a", "doc_b"))
 
-  /** Embedding-space near-dup clusters: the same min-label-propagation
+  /** Embedding-space near-dup clusters: the same union-find
     * components, fed by the SEMANTIC pair stream (multi-probe IVF
     * candidates + exact cosine ≥ 0.45 verify, Similarity.qEmbedNeardup)
     * instead of the lexical LSH stream — the dedup a corpus needs when
     * paraphrases and translations must collapse, not just re-crawls.
     * Pair generation stays cluster-bucketed (never all-pairs); the
-    * component loop runs on the near-dup vec set only. */
+    * component aggregate holds the near-dup vec set only. */
   def qEmbedClusters(spark: SparkSession, d: String): DataFrame =
     connectedComponents(Similarity.embedNeardupPairs(spark, d)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))

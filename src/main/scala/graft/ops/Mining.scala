@@ -356,7 +356,7 @@ object Mining {
     * (SURVEY §6: the 25-row `.collect()` precedent). Iterating that
     * graph distributed would shuffle 625 rows ten times for nothing.
     * For graphs that DON'T aggregate dim-sized, the engine's iterative
-    * template is DedupClusters (checkpointed label propagation). */
+    * template is `lpa3` (checkpointed label propagation). */
   def qPagerank(spark: SparkSession, d: String): DataFrame = {
     val raw = Tables.lineitem(spark, d).select("l_orderkey", "l_suppkey")
       .join(Tables.orders(spark, d).select("o_orderkey", "o_custkey"),

@@ -458,7 +458,7 @@ object Similarity {
     * (map-side combined), never vectors. The 8-row centroid frame is
     * localCheckpoint'ed per round — fresh stats for the broadcast and
     * a lineage cut, the iterative-algorithm discipline of
-    * DedupClusters. An empty cluster drops out of the codebook
+    * Mining's `lpa3`. An empty cluster drops out of the codebook
     * (standard Lloyd behavior), identically on both sides. */
   def qKmeansTrain(spark: SparkSession, d: String): DataFrame = {
     val v = withNorm(spark, Tables.embeddings(spark, d))

@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, StructField, StructType}
 
 /** Minimal transactional table: a commit-log protocol over plain
   * parquet that makes MULTI-WRITER appends, atomic whole-table
@@ -228,7 +228,8 @@ object TxTable {
   /** Per-file column stats from the parquet FOOTER (metadata-only —
     * no data pages read): one-line JSON of typed min/max per TOP-LEVEL
     * primitive column, merged across row groups. Typed so pruning
-    * never round-trips an int64 through a double: `"t":"i"` int32/64,
+    * never round-trips an int64 through a double: `"t":"i"` plain
+    * int32/64 (not a decimal, date or timestamp stored in one),
     * `"t":"d"` float/double, `"t":"s"` UTF-8 binary. A column missing
     * valid statistics in ANY row group is omitted (conservative).
     * Best-effort by design: any failure → no stats line → the file is
@@ -255,7 +256,8 @@ object TxTable {
           val ends = st.flatMap(s => Seq[Any](s.genericGetMin, s.genericGetMax))
           val pt = own.head.getPrimitiveType
           pt.getPrimitiveTypeName match {
-            case INT32 | INT64 =>
+            case INT32 | INT64 if pt.getLogicalTypeAnnotation == null ||
+                pt.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
               val v = ends.map(_.asInstanceOf[Number].longValue)
               out.putObject(name).put("t", "i").put("min", v.min).put("max", v.max)
             case FLOAT | DOUBLE =>
@@ -504,17 +506,24 @@ object TxTable {
       lo: Any, hi: Any, asOf: Long = Long.MaxValue): Seq[String] =
     openLog(spark, table).snapshot(asOf).fold(Seq.empty[String])(prune(_, column, lo, hi))
 
-  private def prune(snap: Snapshot, column: String, lo: Any, hi: Any): Seq[String] =
-    snap.files.filter(f => snap.stats.get(f).forall(overlaps(_, column, lo, hi)))
+  private def prune(snap: Snapshot, column: String, lo: Any, hi: Any): Seq[String] = {
+    val decimal = snap.schema.exists(_.find(_.name == column)
+      .exists(_.dataType.isInstanceOf[DecimalType]))
+    snap.files.filter(f => snap.stats.get(f).forall(overlaps(_, column, decimal, lo, hi)))
+  }
 
   /** False only when `stats` (one file's stats line) proves no value
     * of `column` in the file lies in [lo, hi]. No stats for the
     * column, bounds of another type, or anything unexpected keep the
-    * file. */
-  private def overlaps(stats: String, column: String, lo: Any, hi: Any): Boolean = try {
+    * file. So does an `"i"` line for a `decimal` column: manifests
+    * written before decimals were told apart from integers carry its
+    * unscaled values under that tag. */
+  private def overlaps(stats: String, column: String, decimal: Boolean,
+      lo: Any, hi: Any): Boolean = try {
     val c = Json.readTree(stats).path(column)
     val (mn, mx) = (c.path("min"), c.path("max"))
     (c.path("t").asText, lo, hi) match {
+      case ("i", _, _) if decimal => true
       case ("i" | "d", l: Number, h: Number) if mn.isNumber && mx.isNumber =>
         def dec(n: Number) = new java.math.BigDecimal(n.toString)
         mx.decimalValue.compareTo(dec(l)) >= 0 && mn.decimalValue.compareTo(dec(h)) <= 0

@@ -278,12 +278,10 @@ object Streams {
     * `perceptron_w_v1` artifact the batch scorers read.
     *
     * Plan shape: the dims+1-row landed weight table is collected ONCE
-    * at gate construction and inlined as PLAN LITERALS — there is no
+    * at gate construction and inlined as a PLAN LITERAL — there is no
     * per-batch broadcast, no join, no state; the whole gate is one
-    * native codegen'd projection + filter (zip_with/aggregate over the
-    * row's own array against a literal array), so throughput is the
-    * source's. Exactness: the identical micro-unit BIGINT contract as
-    * the batch scorer (float → double → decimal(18,6) → ×10⁶), so
+    * projection + filter through the batch scorer's own feature and
+    * activation expressions (Classifier.features/activation), so
     * stream ≡ batch is bit-exact, not approximate. At 100 TB the
     * weight vector is dims ≤ a few thousand longs — always
     * plan-literal-sized; nothing here grows with the corpus.
@@ -292,18 +290,10 @@ object Streams {
     * activation (the gate's audit trail). */
   def perceptronGate(spark: SparkSession, d: String,
       arrivals: DataFrame): DataFrame = {
-    val byDim = graft.ops.Classifier.weightsTable(spark, d).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dims = byDim.keysIterator.max.toInt + 1
-    val wLit = array((0 until dims).map(i => lit(byDim(i.toLong))): _*)
-    val b12 = byDim(-1L) * 1000000L
+    val w = typedLit(graft.ops.Classifier.weights(spark, d))
     arrivals
-      .select(col("vec_id"),
-        expr("transform(CAST(embedding AS ARRAY<DOUBLE>), " +
-          "x -> CAST(CAST(x AS DECIMAL(18,6)) * 1000000 AS BIGINT))").as("e6"))
-      .withColumn("act12",
-        aggregate(zip_with(col("e6"), wLit, (x, wd) => x * wd),
-          lit(0L), (acc, p) => acc + p) + lit(b12))
+      .select(col("vec_id"), graft.ops.Classifier.features(col("embedding")).as("x6"))
+      .withColumn("act12", graft.ops.Classifier.activation(col("x6"), w))
       .filter(col("act12") > 0)
       .select("vec_id", "act12")
   }

@@ -140,6 +140,20 @@ class ClassifierSpec extends SparkSpec {
     assert(got.toMap == want)
   }
 
+  test("the perceptron landing runs one job per epoch plus a constant") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_perc_jobs_").toString
+    (0 until 16).map(i => (i.toLong, Array(0.5f - 0.0625f * i, 0.125f * (i % 3)), i % 3))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val jobs = SparkSpec.jobsOf(Classifier.weightsTable(spark, dir))
+    assert(jobs <= Classifier.epochs + 2, s"landing ran $jobs jobs")
+    val (wRef, b6Ref, _) = reference(microRows(dir))
+    val got = Classifier.qPerceptronTrain(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got == (-1L -> b6Ref) +: wRef.indices.map(i => i.toLong -> wRef(i)))
+  }
+
   test("a separable corpus converges after epoch 1: later epochs apply the zero update") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_perc_").toString

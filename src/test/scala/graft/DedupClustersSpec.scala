@@ -28,6 +28,15 @@ class DedupClustersSpec extends SparkSpec {
     assert(labels.size == 40 && labels.values.forall(_ == 0L))
   }
 
+  test("job count does not grow with the graph's diameter") {
+    import spark.implicits._
+    def jobs(pairs: Seq[(Long, Long)]) = SparkSpec.jobsOf(
+      DedupClusters.connectedComponents(pairs.toDF("doc_a", "doc_b")).collect())
+    val pair = jobs(Seq((1L, 2L)))
+    val path = jobs((0L until 39L).map(i => (i, i + 1)))
+    assert(pair <= 4 && path <= 4, s"jobs: 2-node pair $pair, 40-node path $path")
+  }
+
   test("declared query: canonical is the component min, sizes agree, members pair-connected") {
     val rows = DedupClusters.qDedupClusters(spark, "/root/testdata/sf0.01").collect()
     assert(rows.nonEmpty) // sf0.01 plants near-dup docs

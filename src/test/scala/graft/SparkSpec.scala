@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,5 +19,32 @@ object SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Runs `body` and returns the number of Spark jobs it started. The
+    * jobs are told apart by a job group set on this thread only (Spark
+    * hands it on to the threads a query starts), so suites running at
+    * the same time on the shared session do not add theirs. */
+  def jobsOf(body: => Any): Int = {
+    val sc = session.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val n = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      // the listener bus is not public API: wait until it has
+      // delivered every job start before reading the count
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(counter)
+    }
+    n.get
   }
 }

@@ -656,7 +656,7 @@ class SqlSurfaceSpec extends SparkSpec {
         "only UNION ALL in recursive CTEs (UNION_NOT_SUPPORTED_IN_" +
         "RECURSIVE_CTE), and rewriting the fixed point to UNION ALL " +
         "diverges. The Spark-SQL story for cluster derivation is the " +
-        "operator (min-label propagation + pointer jumping); the landed " +
+        "operator (one union-find aggregate); the landed " +
         "pair artifacts it reads ARE SQL-queryable views, and since r12 " +
         "the cluster TABLE itself is too — DedupClusters.ensureClustersView " +
         "lands it as dedup_clusters_v1 (q_cluster_view reads it back in " +

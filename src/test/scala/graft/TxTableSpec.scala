@@ -409,6 +409,26 @@ class TxTableSpec extends SparkSpec {
     assert(kept() == before)
   }
 
+  test("data skipping: a DECIMAL column prunes nothing on its unscaled integer stats") {
+    import spark.implicits._
+    val t = freshTable("skipdec")
+    TxTable.append(Seq(BigDecimal("1.50"), BigDecimal("1.75")).toDF("amt")
+      .select(col("amt").cast("decimal(10,2)").as("amt")).coalesce(1), t)
+    def rows() = TxTable.readPruned(spark, t, "amt", 1, 2).collect().map(_.getDecimal(0)).sorted.toSeq
+    val want = TxTable.read(spark, t).filter(col("amt").between(1, 2))
+      .collect().map(_.getDecimal(0)).sorted.toSeq
+    assert(want.length == 2)
+    assert(rows() == want)
+    // a manifest written before the fix tags the column "i" with the
+    // unscaled values 150..175; the file must still be kept
+    val manifest = new java.io.File(s"$t/_txlog").listFiles().filter(_.getName.endsWith(".txn")).head
+    val lines = Files.readAllLines(manifest.toPath).asScala.filterNot(_.startsWith("stats=")).flatMap(l =>
+      if (l.startsWith("add=")) Seq(l, s"stats=${l.drop(4)}\t" + """{"amt":{"t":"i","min":150,"max":175}}""")
+      else Seq(l))
+    Files.write(manifest.toPath, lines.asJava)
+    assert(rows() == want)
+  }
+
   test("each operation lists the log once") {
     spark.sparkContext.hadoopConfiguration.set("fs.mock.impl", classOf[MockFs].getName)
     Claims.register("mock", PosixLinkClaim)
