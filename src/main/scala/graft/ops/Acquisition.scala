@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -392,6 +392,46 @@ object Acquisition {
       .orderBy("event_id")
   }
 
+  /** Daily completeness accounting — the reference's raison d'être
+    * (the dashboard's "is yesterday complete?" question, app.py:467-480
+    * S3-tag inventory + index.html status poll): for every
+    * (channel, day) cell of the expected grid, how many of the 24
+    * hourly chunk slots actually landed, and how many are missing.
+    * The grid is the cross product of the distinct channels and the
+    * distinct days. An empty day surfaces as n_landed = 0, not as an
+    * absent row — absence is precisely what the report exists to show.
+    *
+    * Plan shape: events are scanned once. One aggregate collapses them
+    * to (channel, day) → distinct landed hours; that |channels|×|days|
+    * frame then collapses to ONE row holding the distinct channels, the
+    * distinct days and a (channel, day) → n_landed map. Exploding the
+    * two sets enumerates the grid on one partition, and each cell looks
+    * its count up in the map. NULL keys keep the grid's equi-join
+    * semantics: a NULL channel or day is a grid value of its own (the
+    * sets drop NULLs, so a flag re-adds it), and a cell with a NULL
+    * key never finds a count, so it reports n_landed = 0. */
+  def qCompleteness(spark: SparkSession, d: String): DataFrame = {
+    def withNull(set: String, hasNull: String): Column =
+      when(col(hasNull), concat(col(set), array(lit(null)))).otherwise(col(set))
+    val landed = Tables.events(spark, d)
+      .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+      .agg(countDistinct(date_trunc("hour", col("ts"))).as("n_landed"))
+    val known = col("event_type").isNotNull && col("day").isNotNull
+    landed
+      .agg(collect_set("event_type").as("types"), max(col("event_type").isNull).as("null_type"),
+        collect_set("day").as("days"), max(col("day").isNull).as("null_day"),
+        map_from_entries(collect_list(
+          when(known, struct(struct(col("event_type"), col("day")), col("n_landed"))))).as("cells"))
+      .select(explode(withNull("types", "null_type")).as("event_type"),
+        withNull("days", "null_day").as("days"), col("cells"))
+      .select(col("event_type"), explode(col("days")).as("day"),
+        coalesce(element_at(col("cells"), struct(col("event_type"), col("day"))), lit(0L))
+          .as("n_landed"))
+      .select(col("event_type"), col("day"), col("n_landed"),
+        lit(24L).as("n_expected"), (lit(24L) - col("n_landed")).as("n_missing"))
+      .orderBy("event_type", "day")
+  }
+
   /** E8b: bounded-range join, bucketed — per event, the same user's
     * earlier events inside the trailing 24 h (the "recent activity in
     * the acquisition window" feature; reference window derivation
@@ -406,32 +446,6 @@ object Acquisition {
     * (user, bucket) with the exact range predicate evaluated inside
     * the join — constant 2× fan-out instead of quadratic, AQE/skew
     * handling applies, and both sides partition-prune on the bucket. */
-  /** Daily completeness accounting — the reference's raison d'être
-    * (the dashboard's "is yesterday complete?" question, app.py:467-480
-    * S3-tag inventory + index.html status poll): for every
-    * (channel, day) cell of the expected grid, how many of the 24
-    * hourly chunk slots actually landed, and how many are missing.
-    * The grid is the cross product of the two DISTINCT dims (both
-    * config-sized — broadcast, like q_cross_dims' enumeration); the
-    * landed side collapses to one row per (channel, day, hour) before
-    * any join. An empty day surfaces as n_landed = 0, not as an
-    * absent row — absence is precisely what the report exists to show. */
-  def qCompleteness(spark: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(spark, d).select(col("event_type"),
-      date_trunc("day", col("ts")).as("day"),
-      date_trunc("hour", col("ts")).as("hr"))
-    val landed = ev.distinct()
-      .groupBy("event_type", "day").agg(count(lit(1)).as("n_landed"))
-    val grid = ev.select("event_type").distinct()
-      .crossJoin(broadcast(ev.select("day").distinct()))
-    grid.join(landed, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("n_landed"), lit(0L)).as("n_landed"),
-        lit(24L).as("n_expected"),
-        (lit(24L) - coalesce(col("n_landed"), lit(0L))).as("n_missing"))
-      .orderBy("event_type", "day")
-  }
-
   def qRangeJoin(spark: SparkSession, d: String): DataFrame = {
     val bucketUs = 86400L * 1000000L // 24 h in microseconds
     val ev = Tables.events(spark, d)

@@ -35,9 +35,9 @@ import graft.Tables
   * Algorithm: the bias is one more weight, against a constant feature
   * of 10⁶ appended to every row's micro-unit features, so
   * w·x + b6·10⁶ is one dot product and the update is one sum:
-  * each epoch is ONE exact `Dataset.reduce` of Σ g·x over the corpus,
-  * with g = y when the margin is ≤ 0 and 0 otherwise. Partition
-  * partials meet on the driver, summed with `Math.addExact` /
+  * each epoch is ONE exact reduce of Σ g·x over the corpus, with g = y
+  * when the margin is ≤ 0 and 0 otherwise. Partition partials meet on
+  * the driver, summed with `Math.addExact` /
   * `multiplyExact` so an overflow throws, as the ANSI SQL margin does.
   * The weights live on the driver as a dims+1 long array (bias last)
   * and enter the next epoch's margin pass as a plan literal.
@@ -97,22 +97,25 @@ object Classifier {
     corpus.withColumn("margin", col("y").cast("long") * activation(col("x6"), w))
 
   /** Runs the `epochs`-epoch batch-perceptron loop, one corpus reduce
-    * per epoch; returns the final dims+1 weights, bias last. */
-  private def train(corpus: DataFrame): Array[Long] = {
+    * per epoch; returns the final dims+1 weights, bias last, or None
+    * for an empty corpus. Each partition folds its rows to at most one
+    * partial and the driver sums the partials, so an empty corpus
+    * reduces to nothing instead of failing as `Dataset.reduce` does. */
+  private def train(corpus: DataFrame): Option[Array[Long]] = {
     import corpus.sparkSession.implicits._
     val zero = array_repeat(lit(0L), size(col("x6"))) // w₀, as wide as each row
     var w = Option.empty[Array[Long]]
     for (_ <- 1 to epochs) {
       val step = margins(corpus, w.fold(zero)(typedLit(_)))
         .select("y", "x6", "margin").as[(Int, Array[Long], Long)]
-        .map { case (y, x6, margin) =>
+        .mapPartitions(_.map { case (y, x6, margin) =>
           val g = if (margin <= 0) y.toLong else 0L
           x6.map(Math.multiplyExact(g, _))
-        }
-        .reduce(plus _)
-      w = Some(w.fold(step)(plus(_, step)))
+        }.reduceOption(plus).iterator)
+        .collect().reduceOption(plus)
+      w = step.map(s => w.fold(s)(plus(_, s)))
     }
-    w.get
+    w
   }
 
   private def plus(a: Array[Long], b: Array[Long]): Array[Long] = {
@@ -133,17 +136,20 @@ object Classifier {
     val dir = graft.sources.Landing.table(spark, d, "perceptron_w_v1") {
       val corpus = corpus6(spark, d).persist()
       val w = try train(corpus) finally corpus.unpersist(blocking = false)
-      (w.indices.init.map(i => (i.toLong, w(i))) :+ (-1L -> w.last))
+      w.fold(Seq.empty[(Long, Long)])(w =>
+          w.indices.init.map(i => (i.toLong, w(i))) :+ (-1L -> w.last))
         .toDF("dim", "w6").coalesce(1)
     }
     graft.sinks.TxTable.read(spark, dir)
   }
 
   /** The landed artifact as the dims+1 weight array (bias last) that
-    * the margin pass takes — a dims+1-row read, not a training job. */
+    * the margin pass takes — a dims+1-row read, not a training job.
+    * An empty corpus lands no weights, and scores no row. */
   private[graft] def weights(spark: SparkSession, d: String): Array[Long] = {
     val byDim = weightsTable(spark, d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    ((0L until byDim.size - 1L) :+ -1L).map(byDim).toArray
+    if (byDim.isEmpty) Array.empty
+    else ((0L until byDim.size - 1L) :+ -1L).map(byDim).toArray
   }
 
   /** Declared: final weight vector after 3 epochs, one row per

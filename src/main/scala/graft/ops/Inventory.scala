@@ -747,23 +747,26 @@ object Inventory {
     * cells (empty cells contribute 0 in the limit). Per-cell terms
     * are doubles over exact integer operands, pinned to
     * DECIMAL(18,12) before the exact sum — the qEntropy parity
-    * recipe. One hash aggregate builds the contingency table; the
-    * marginals re-aggregate its ≤|langs|·|sources| rows, never the
-    * corpus. */
-  def qMutualInfo(spark: SparkSession, d: String): DataFrame = {
-    val cells = Tables.documents(spark, d)
+    * recipe.
+    *
+    * Plan shape: one plan, two exchanges. One hash aggregate builds
+    * the contingency table; N, c_lang and c_source are window sums over
+    * its ≤|langs|·|sources| cells. N comes first: its unpartitioned
+    * window moves the cells to one partition, which already satisfies
+    * the two marginal windows and the final aggregate, so neither adds
+    * an exchange. N counts every cell; a cell with a NULL label is then
+    * dropped, as an equi-join to the marginals drops it. */
+  def qMutualInfo(spark: SparkSession, d: String): DataFrame =
+    Tables.documents(spark, d)
       .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-      .persist() // marginals + total re-read the tiny contingency table
-    val ml = cells.groupBy("lang").agg(sum("o").cast("long").as("cl"))
-    val ms = cells.groupBy("source").agg(sum("o").cast("long").as("cs"))
-    val n = cells.agg(sum("o").cast("long").as("nn"))
-    cells.join(ml, "lang").join(ms, "source")
-      .crossJoin(broadcast(n)) // 1-row corpus total (PlanQualitySpec-allowlisted)
+      .withColumn("nn", sum("o").over(Window.partitionBy()))
+      .withColumn("cl", sum("o").over(Window.partitionBy("lang")))
+      .withColumn("cs", sum("o").over(Window.partitionBy("source")))
+      .filter(col("lang").isNotNull && col("source").isNotNull)
       .withColumn("term_mi",
         expr("(o / CAST(nn AS DOUBLE)) * ln((o * nn) / CAST(cl * cs AS DOUBLE))"))
       .agg(max("nn").as("n_docs"), count(lit(1)).as("n_cells"),
         sum(col("term_mi").cast("decimal(18,12)")).cast("double").as("mi_nats"))
-  }
 
   /** Chi-squared independence contributions per lang over the
     * (lang × source) contingency grid — MI's hypothesis-test
@@ -771,23 +774,30 @@ object Inventory {
     * computed as (o·N − c_lang·c_source)²/(N·c_lang·c_source) so
     * every operand stays an exact 64-bit integer until the one double
     * division. Unlike [[qMutualInfo]] the grid here is the FULL
-    * lang × source enumeration (an absent cell contributes e, not 0),
-    * built by broadcasting the two distinct-value dims. Per-lang rows
-    * keep the table readable; the overall statistic is their sum. */
+    * lang × source enumeration (an absent cell contributes e, not 0).
+    * Per-lang rows keep the table readable; the overall statistic is
+    * their sum.
+    *
+    * Plan shape: one plan, two exchanges. The contingency aggregate
+    * collapses to ONE row: the distinct langs, the distinct sources and
+    * a (lang, source) → o map. Exploding the two sets gives the
+    * zero-filled grid on one partition, where N and the marginals are
+    * window sums that need no exchange. NULL labels take no part: the
+    * sets drop them, so a cell with a NULL label is never looked up. */
   def qChi2Test(spark: SparkSession, d: String): DataFrame = {
-    val cells = Tables.documents(spark, d)
+    val known = col("lang").isNotNull && col("source").isNotNull
+    Tables.documents(spark, d)
       .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-      .persist() // grid left-join + marginals
-    val grid = cells.select("lang").distinct()
-      .crossJoin(broadcast(cells.select("source").distinct())) // dim×dim enumeration (allowlisted)
-    val g = grid.join(cells, Seq("lang", "source"), "left")
-      .select(col("lang"), col("source"), coalesce(col("o"), lit(0L)).as("o"))
-      .persist() // marginals + total + per-cell terms
-    val ml = g.groupBy("lang").agg(sum("o").cast("long").as("cl"))
-    val ms = g.groupBy("source").agg(sum("o").cast("long").as("cs"))
-    val n = g.agg(sum("o").cast("long").as("nn"))
-    g.join(ml, "lang").join(ms, "source")
-      .crossJoin(broadcast(n)) // 1-row total (allowlisted)
+      .agg(collect_set("lang").as("langs"), collect_set("source").as("sources"),
+        map_from_entries(collect_list(
+          when(known, struct(struct(col("lang"), col("source")), col("o"))))).as("cells"))
+      .select(explode(col("langs")).as("lang"), col("sources"), col("cells"))
+      .select(col("lang"), explode(col("sources")).as("source"), col("cells"))
+      .select(col("lang"), col("source"),
+        coalesce(element_at(col("cells"), struct(col("lang"), col("source"))), lit(0L)).as("o"))
+      .withColumn("nn", sum("o").over(Window.partitionBy()))
+      .withColumn("cl", sum("o").over(Window.partitionBy("lang")))
+      .withColumn("cs", sum("o").over(Window.partitionBy("source")))
       .withColumn("term_chi2",
         expr("""((o * nn - cl * cs) * (o * nn - cl * cs))
                | / CAST(nn * cl * cs AS DOUBLE)""".stripMargin))

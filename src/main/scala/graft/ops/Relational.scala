@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.MaxTiesAggregator
 
 /** Classic warehouse-shaped analytics: the multi-join / aggregate /
   * top-k reports a completeness store grows into once the landed data
@@ -263,21 +264,29 @@ object Relational {
 
   /** Top supplier(s) by quarterly revenue (TPC-H Q15 shape): the
     * max-of-an-aggregate selection. Per-supplier revenue stays an
-    * exact DECIMAL(38,12) — the 1-row max broadcasts back and the
-    * winners fall out of an exact decimal EQUALITY (Q15's defining
-    * subtlety: selecting the max by float equality is flaky; decimal
-    * equality is not). Revenue goes to double only in the projected
-    * output, after selection. */
+    * exact DECIMAL(38,12) and the winners are every supplier at an
+    * exact decimal EQUALITY with the max (Q15's defining subtlety:
+    * selecting the max by float equality is flaky; decimal equality is
+    * not). Revenue goes to double only in the projected output, after
+    * selection.
+    *
+    * Plan shape: lineitem is scanned once. The per-supplier aggregate
+    * feeds one bounded aggregate, [[graft.functions.MaxTiesAggregator]],
+    * that carries the max and every supplier tied at it — only the
+    * running max and its ties per partition enter its shuffle, so the
+    * |suppliers|-row frame never meets a global window or a second
+    * scan. The winners then meet the broadcast supplier dim. */
   def qTpchTopSupplier(spark: SparkSession, d: String): DataFrame = {
-    val perSupp = Tables.lineitem(spark, d)
+    import spark.implicits._
+    Tables.lineitem(spark, d)
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
       .groupBy("l_suppkey")
       .agg(sum(dec(col("l_extendedprice")) *
         (lit(1).cast("decimal(18,6)") - dec(col("l_discount")))).as("rev"))
-    perSupp
-      .join(broadcast(perSupp.agg(max(col("rev")).as("max_rev"))),
-        col("rev") === col("max_rev"))
+      .select("rev", "l_suppkey").as[(java.math.BigDecimal, Option[Long])]
+      .select(MaxTiesAggregator.toColumn) // one (max, tied keys) row
+      .select(col("_1").as("rev"), explode(col("_2")).as("l_suppkey"))
       .join(broadcast(Tables.supplier(spark, d).select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("rev").cast("double").as("revenue"))
@@ -658,9 +667,14 @@ object Relational {
     * single vendor could hold hostage). Shares derive from
     * floor-to-unit integer revenues so every step after the decimal
     * aggregate is 64-bit integer; the square-sum collapses over the
-    * ≤|types|×|suppliers| frame. */
-  def qHhiConcentration(spark: SparkSession, d: String): DataFrame = {
-    val perSupp = Tables.spread(spark, Tables.lineitem(spark, d)
+    * ≤|types|×|suppliers| frame.
+    *
+    * Plan shape: one plan. The per-type total is a window sum over the
+    * (type, supplier) aggregate, partitioned by p_type — the same hash
+    * exchange the final per-type aggregate then reuses. A NULL p_type
+    * is dropped, as an equi-join to the totals drops it. */
+  def qHhiConcentration(spark: SparkSession, d: String): DataFrame =
+    Tables.spread(spark, Tables.lineitem(spark, d)
       .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount"),
       "l_partkey")
       .join(Tables.part(spark, d).select("p_partkey", "p_type"),
@@ -669,14 +683,12 @@ object Relational {
       .agg(floor(sum(dec(col("l_extendedprice"))
         * (lit(1).cast("decimal(18,6)") - dec(col("l_discount"))))).cast("long")
         .as("rev_int"))
-      .persist() // type totals re-aggregate the supplier frame
-    val totals = perSupp.groupBy("p_type").agg(sum("rev_int").as("type_rev"))
-    perSupp.join(broadcast(totals), "p_type")
+      .filter(col("p_type").isNotNull)
+      .withColumn("type_rev", sum("rev_int").over(Window.partitionBy("p_type")))
       .withColumn("share_ppm", expr("(rev_int * 1000000) div type_rev"))
       .groupBy("p_type")
       .agg(count(lit(1)).as("n_suppliers"),
         max("share_ppm").as("top_share_ppm"),
         expr("CAST(sum(share_ppm * share_ppm) div 1000000 AS BIGINT)").as("hhi_ppm"))
       .orderBy("p_type")
-  }
 }

@@ -134,40 +134,4 @@ object Sinks {
       n
     } finally fresh.unpersist()
   }
-
-  /** Exactly-once `foreachBatch` sink: Structured Streaming's
-    * foreachBatch contract is AT-LEAST-ONCE — after a crash between
-    * the user function and the offset commit, the SAME (batchId, data)
-    * is re-delivered on restart. For a non-transactional sink (plain
-    * parquet append, an HTTP POST, the reference's S3 upload) that
-    * replay duplicates data unless the sink dedupes on batchId
-    * itself. This wrapper is that dedupe: a per-batch commit marker
-    * under `<path>/_graft_commits/<batchId>` is written AFTER the
-    * batch lands, and a re-delivered batchId whose marker exists is
-    * skipped entirely. Marker after data means a crash between the
-    * two re-runs the write (at-least-once on the inner write) but the
-    * DATA for a batch lands under a batch-suffixed subdirectory that
-    * the rerun overwrites — so replays converge instead of
-    * accumulating: effectively-once end to end.
-    *
-    * Scale note: the marker check is one FileSystem.exists per
-    * micro-batch (no listing, no data read), and batch subdirectories
-    * keep concurrent history queries consistent — a half-written
-    * replay never mutates rows an earlier successful attempt exposed.
-    * Returns true iff this call performed the write (false = replay
-    * skipped). Use as
-    * `.writeStream.foreachBatch(Sinks.idempotentBatchWriter(path) _)`. */
-  def idempotentBatchWriter(path: String)(df: DataFrame, batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    val commits = new Path(path, "_graft_commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(commits, batchId.toString)
-    if (fs.exists(marker)) false
-    else {
-      df.write.mode(SaveMode.Overwrite).parquet(s"$path/batch_id=$batchId")
-      fs.mkdirs(commits)
-      fs.create(marker, true).close()
-      true
-    }
-  }
 }

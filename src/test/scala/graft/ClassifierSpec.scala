@@ -154,6 +154,18 @@ class ClassifierSpec extends SparkSpec {
     assert(got == (-1L -> b6Ref) +: wRef.indices.map(i => i.toLong -> wRef(i)))
   }
 
+  test("an empty corpus lands an empty weights table and scores nothing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_perc_empty_").toString
+    Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val w = Classifier.weightsTable(spark, dir)
+    assert(w.columns.toSeq == Seq("dim", "w6"))
+    assert(w.count() == 0L)
+    assert(Classifier.qPerceptronEval(spark, dir).count() == 0L)
+    assert(Classifier.qPerceptronScore(spark, dir).count() == 0L)
+  }
+
   test("a separable corpus converges after epoch 1: later epochs apply the zero update") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_perc_").toString

@@ -31,13 +31,11 @@ class PlanQualitySpec extends SparkSpec {
   private val nestedLoopAllowed = Set(
     "q_cross_dims",        // region × nation × literal dims (the reference's enumeration)
     "q_acquisition_plan",  // same dim cross product feeding the flagship plan
-    "q_completeness",      // distinct channels × distinct days expected grid
     "q_cosine_topk",       // probes (5 rows) broadcast against the corpus
     "q_knn_classify",      // probes (10 rows) broadcast against the corpus
     "q_bm25",              // 1-row corpus stats (N, Σdl) broadcast
     "q_hybrid_rank",       // composes q_bm25 — same 1-row stats broadcast
     "q_rbo_overlap",       // composes q_bm25 — same 1-row stats broadcast
-    "q_bloom_dedup",       // 1-row bloom filter broadcast to the arrival scan
     "q_daily_anomaly",     // 1-row day-volume moment stats broadcast
     "q_ann_ivf",           // centroids (8) broadcast for assignment
     "q_ann_ivfpq",         // same centroid broadcast in the IVF half
@@ -45,9 +43,6 @@ class PlanQualitySpec extends SparkSpec {
     "q_embed_neardup",     // multi-probe assignment, same centroid broadcast
     "q_kmeans_step",       // assignment step, same centroid broadcast
     "q_kmeans_train",      // Lloyd rounds, same centroid broadcast per round
-    "q_perceptron_train",  // 1-row weight frame broadcast per epoch
-    "q_perceptron_eval",   // same 1-row weight-frame broadcast
-    "q_perceptron_score",  // same 1-row weight-frame broadcast
     "q_tfidf",             // 1-row corpus count N broadcast
     "q_perplexity_proxy",  // 1-row total-token count broadcast
     "q_vocab_coverage",    // 1-row total-token count broadcast
@@ -86,8 +81,6 @@ class PlanQualitySpec extends SparkSpec {
     "q_vocab_growth",      // 10-row decile-threshold broadcast, theta-joined to prefixes
     "q_detector_agreement", // three 1-row pair-count totals broadcast-crossed
     "q_kl_drift",          // |sources| × top-100 vocab grid + 1-row corpus mass broadcast
-    "q_mutual_info",       // 1-row corpus total broadcast over the contingency cells
-    "q_chi2_test",         // lang × source dim enumeration + 1-row total broadcast
     "q_join_card_est",     // per-join 1-row stats/actual-count broadcasts
     "q_decayed_trend",     // 1-row corpus-watermark broadcast
     "q_wau_stickiness",    // ≤|days|-row grid banded-joined to (user, day) pairs
@@ -97,7 +90,6 @@ class PlanQualitySpec extends SparkSpec {
     "q_path_trigrams",     // 1-row trigram total broadcast
     "q_temporal_split",    // 1-row cutoff + 1-row event totals broadcast
     "q_woe_encode",        // 1-row label totals broadcast
-    "q_assortativity",     // 1-row order total broadcast (lift-edge filter)
     "q_daily_close",       // |users| × observed-day-grid enumeration
     "q_ks_test",           // |sources| × distinct-length grid enumeration (CDF zero-fill)
     "q_mannwhitney",       // |sources| × distinct-length grid enumeration (rank zero-fill)
@@ -107,15 +99,21 @@ class PlanQualitySpec extends SparkSpec {
     "q_js_divergence")     // |sources| × top-100 vocab grid enumeration (zero-fill)
 
   test("no declared query plans a cartesian product; nested-loop joins only where the broadcast side is constant") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val plans = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
       spark.catalog.clearCache() // drop per-query persisted subtrees
-      val cartesian = if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct") else None
-      val nlj = if (plan.contains("BroadcastNestedLoopJoin") && !nestedLoopAllowed(name))
-        Some(s"$name: unexpected BroadcastNestedLoopJoin") else None
-      cartesian ++ nlj
+      name -> plan
     }
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val cartesian = plans.collect { case (name, plan) if plan.contains("CartesianProduct") => name }
+    assert(cartesian.isEmpty, s"CartesianProduct in ${cartesian.mkString(", ")}")
+    // Exact equality, both directions, as for the global windows: a
+    // retired broadcast must retire its allowlist entry too.
+    val nlj = plans.collect { case (name, plan) if plan.contains("BroadcastNestedLoopJoin") => name }.toSet
+    val unexpected = nlj -- nestedLoopAllowed
+    val stale = nestedLoopAllowed -- nlj
+    assert(unexpected.isEmpty && stale.isEmpty,
+      s"BroadcastNestedLoopJoin drift — new offenders (document the constant side or fix the plan): " +
+        s"${unexpected.toSeq.sorted.mkString(", ")}; stale allowlist entries: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   test("similarity top-k plans use the bounded aggregator, not per-probe window sorts") {
@@ -150,7 +148,9 @@ class PlanQualitySpec extends SparkSpec {
     "q_pmi_bigrams"      -> "top-N bigram rows after the count cut",
     "q_degree_dist"      -> "|distinct degrees| rows (ccdf accumulation)",
     "q_return_hazard"    -> "≤15 gap-day buckets (survival accumulation)",
-    "q_interleave"       -> "|sources| rows (source ordinal dim)")
+    "q_interleave"       -> "|sources| rows (source ordinal dim)",
+    "q_mutual_info"      -> "|langs|×|sources| contingency cells (corpus total N)",
+    "q_chi2_test"        -> "|langs|×|sources| zero-filled grid (grid total N)")
 
   test("no declared query runs an unpartitioned window over fact-sized input; global windows only on dim/band-bounded aggregates") {
     // The OPTIMIZED LOGICAL plan, not executedPlan: under AQE the

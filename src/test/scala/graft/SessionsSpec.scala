@@ -65,6 +65,7 @@ class SessionsSpec extends SparkSpec {
     check("src", """SparkSession\.builder""", "Sessions.scala")
     check("src", """GraftFunctions\.register""", "Sessions.scala", "Tables.scala", "VecDot.scala")
     check("src/main", "_LANDED")
+    check("src/main", "_graft_commits") // one commit protocol: the TxTable log
     // one corpus stamp, one owner of the log layout
     check("src/main", """\$\{\w+\.length\}:\$\{\w+\.lastModified\}""", "Tables.scala")
     check("src/main", "_txlog", "TxTable.scala")

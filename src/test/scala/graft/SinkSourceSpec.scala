@@ -69,28 +69,6 @@ class SinkSourceSpec extends SparkSpec {
     assert(back.filter(col("date_part") === 20240111).count() == 5)
   }
 
-  test("idempotent foreachBatch: re-delivered batchId is skipped, crash-replay converges") {
-    val out = tmp() + "/stream_sink"
-    val b0 = Tables.region(spark, sfDir)
-    // first delivery writes
-    assert(Sinks.idempotentBatchWriter(out)(b0, 0L))
-    val once = spark.read.parquet(out).count()
-    // at-least-once replay of the SAME batch: skipped, data unchanged
-    assert(!Sinks.idempotentBatchWriter(out)(b0, 0L))
-    assert(spark.read.parquet(out).count() == once)
-    // crash between data and marker: simulate by deleting the marker —
-    // the replay re-runs the write but OVERWRITES the batch directory,
-    // so the total converges instead of doubling
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/_graft_commits/0"), false)
-    assert(Sinks.idempotentBatchWriter(out)(b0, 0L))
-    assert(spark.read.parquet(out).count() == once)
-    // a new batchId appends under its own subdirectory
-    assert(Sinks.idempotentBatchWriter(out)(Tables.nation(spark, sfDir), 1L))
-    assert(spark.read.parquet(out).count() == once + 25)
-  }
-
   test("HTTP source stub: one partition per host, placeholder rows, throttle option") {
     val df = spark.read.format("graft.sources.HttpPlaceholderSource")
       .option("urls",
