@@ -133,14 +133,13 @@ object Classifier {
     * them again. One partition: one small file. */
   private[graft] def weightsTable(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val dir = graft.sources.Landing.table(spark, d, "perceptron_w_v1") {
+    graft.sources.Landing.table(spark, d, "perceptron_w_v1") {
       val corpus = corpus6(spark, d).persist()
       val w = try train(corpus) finally corpus.unpersist(blocking = false)
       w.fold(Seq.empty[(Long, Long)])(w =>
           w.indices.init.map(i => (i.toLong, w(i))) :+ (-1L -> w.last))
         .toDF("dim", "w6").coalesce(1)
     }
-    graft.sinks.TxTable.read(spark, dir)
   }
 
   /** The landed artifact as the dims+1 weight array (bias last) that

@@ -65,10 +65,8 @@ object DedupClusters {
     * for free on later sessions once the artifact exists. Returns the
     * view name. */
   def ensureClustersView(spark: SparkSession, d: String): String = {
-    val dir = graft.sources.Landing.table(spark, d, "dedup_clusters_v1") {
-      qDedupClusters(spark, d)
-    }
-    graft.sinks.TxTable.read(spark, dir).createOrReplaceTempView("dedup_clusters_v1")
+    graft.sources.Landing.table(spark, d, "dedup_clusters_v1")(qDedupClusters(spark, d))
+      .createOrReplaceTempView("dedup_clusters_v1")
     "dedup_clusters_v1"
   }
 

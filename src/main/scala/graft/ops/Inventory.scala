@@ -783,7 +783,10 @@ object Inventory {
     * a (lang, source) → o map. Exploding the two sets gives the
     * zero-filled grid on one partition, where N and the marginals are
     * window sums that need no exchange. NULL labels take no part: the
-    * sets drop them, so a cell with a NULL label is never looked up. */
+    * sets drop them, so a cell with a NULL label is never looked up.
+    * A lang seen only with a NULL source (or a source only with a NULL
+    * lang) has a zero marginal; its terms are NULL, not an error, as
+    * in DuckDB, and a lang with no non-NULL term reports a NULL part. */
   def qChi2Test(spark: SparkSession, d: String): DataFrame = {
     val known = col("lang").isNotNull && col("source").isNotNull
     Tables.documents(spark, d)
@@ -799,8 +802,8 @@ object Inventory {
       .withColumn("cl", sum("o").over(Window.partitionBy("lang")))
       .withColumn("cs", sum("o").over(Window.partitionBy("source")))
       .withColumn("term_chi2",
-        expr("""((o * nn - cl * cs) * (o * nn - cl * cs))
-               | / CAST(nn * cl * cs AS DOUBLE)""".stripMargin))
+        expr("""try_divide((o * nn - cl * cs) * (o * nn - cl * cs),
+               |  CAST(nn * cl * cs AS DOUBLE))""".stripMargin))
       .groupBy("lang")
       .agg(max("cl").as("n_docs"), count(lit(1)).as("n_cells"),
         sum(col("term_chi2").cast("decimal(18,12)")).cast("double").as("chi2_part"))

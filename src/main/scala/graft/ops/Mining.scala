@@ -97,7 +97,7 @@ object Mining {
     // serialize through the version-0 claim instead of overwriting each
     // other mid-read
     var bk: DataFrame = null
-    val dir = graft.sources.Landing.table(spark, d, "lift_edges_v2") {
+    val edges = graft.sources.Landing.table(spark, d, "lift_edges_v2") {
       bk = basketFrame(spark, d)
       brandPairsOf(bk)
         .select("a", "b", "n_ab", "n_a", "n_b", "n_orders", "pos_lift")
@@ -106,7 +106,7 @@ object Mining {
     // staging happened (or was skipped) inside the call — safe to drop
     // the basket cache now
     if (bk != null) bk.unpersist(blocking = false)
-    graft.sinks.TxTable.read(spark, dir)
+    edges
   }
 
   /** Association mining over order baskets at the brand granularity:
@@ -479,7 +479,7 @@ object Mining {
     * small file; consumers broadcast it. */
   private[graft] def ownPairs(spark: SparkSession, d: String): DataFrame = {
     // r10: landed on TxTable (see liftEdges) — multi-JVM-safe landing
-    val dir = graft.sources.Landing.table(spark, d, "own_pairs_v2") {
+    graft.sources.Landing.table(spark, d, "own_pairs_v2") {
       ownedFrame(spark, d)
         .groupBy("custkey").agg(collect_set("brand").as("basket"))
         .select(explode(col("basket")).as("b1"), col("basket"))
@@ -488,7 +488,6 @@ object Mining {
         .groupBy("b1", "b2").agg(count(lit(1)).as("co"))
         .coalesce(1)
     }
-    graft.sinks.TxTable.read(spark, dir)
   }
 
   /** Item-based collaborative filtering: for every customer, the top-3

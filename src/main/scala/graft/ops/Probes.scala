@@ -23,10 +23,11 @@ import graft.Tables
   *  - `n` vs `ndXy` (count-distinct of the (x, y) location hash): the
   *    co-location factor gating the grid family's location collapse.
   *
-  * Cache key = (dataset dir, `embeddings.parquet` mtime+len), so a
-  * spec that rewrites a fixture dir in-session is invalidated
-  * automatically; driver testdata is immutable within a session. The
-  * status probe is one driver-side metadata call, not a Spark job. */
+  * Cache key = (dataset dir, `Tables.pathStamp` of `embeddings.parquet`),
+  * the stamp that also guards the Tables memo and the Landing key: it
+  * lists a directory table's part files, so a spec that rewrites a
+  * fixture in-session, even one part file in place, is invalidated
+  * automatically. Metadata calls only, not a Spark job. */
 object Probes {
 
   final case class EmbedProbe(n: Long, ndContent: Long,
@@ -36,16 +37,10 @@ object Probes {
   }
 
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), EmbedProbe]()
-
-  private def fingerprint(spark: SparkSession, d: String): (String, Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    (d, st.getModificationTime, st.getLen)
-  }
+    new java.util.concurrent.ConcurrentHashMap[(String, String), EmbedProbe]()
 
   def embeddings(spark: SparkSession, d: String): EmbedProbe =
-    cache.computeIfAbsent(fingerprint(spark, d), _ => {
+    cache.computeIfAbsent((d, Tables.pathStamp(s"$d/embeddings.parquet")), _ => {
       val e = expr("CAST(embedding AS ARRAY<DOUBLE>)")
       val r = Tables.embeddings(spark, d)
         .select(e.as("e"), col("label").cast("long").as("label"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -428,34 +428,6 @@ object Quality {
     * so oracle results are unchanged. */
   private[graft] val maxBandGroup = 1000
 
-  /** E22: MinHash + LSH near-duplicate pairs, verified with exact
-    * Jaccard ≥ 0.5 over word 3-gram shingles.
-    *
-    * Signature: ONE md5 per shingle, sliced into 8 disjoint 4-hex-char
-    * sub-hashes; minhash_j = min of slice j over the doc's shingles.
-    * An 8× cheaper signature than 8 seeded hashes; 16-bit slices add a
-    * ~1/2e5 per-band false-collision rate, which the exact verify
-    * absorbs (and the oracle replicates bit-for-bit).
-    *
-    * Plan hygiene: the expensive shared subtrees are `.persist()`ed —
-    * Catalyst does not share common subplans, so without the caches the
-    * inverted index would be recomputed once per reference (signature
-    * agg + both sides of the verify join; measured ~4× the work). The
-    * per-doc set size rides along in the signature aggregate, so sizing
-    * needs no extra pass over the index.
-    *
-    * Candidates: band rows self-join on (band_idx, band_val) after
-    * hot groups are capped away (`maxBandGroup`) — both the group-size
-    * window and the join reuse the same hash partitioning, and the
-    * whole path is codegen'd (the previous collect_list +
-    * transform/slice expansion ran interpreted).
-    *
-    * Everything up to the pair expansion is plain codegen'd
-    * aggregation — signatures are `min(substring(md5))` aggregates
-    * over the exploded shingle stream, not array lambdas (interpreted,
-    * measured 10×+ slower). The verify counts common shingles through
-    * the inverted index restricted to candidates, so no shingle array
-    * is ever materialized or shuffled. */
   /** Fused 8-slice minhash signature + distinct-shingle count as a
     * pure projection over the documents scan — the native `minhash8`
     * expression computes per doc what `minhashSig` aggregates over the
@@ -516,8 +488,33 @@ object Quality {
           .as("n_docs_capped"))
       .orderBy("band_idx")
 
-  def qMinhashNeardup(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** E22: MinHash + LSH near-duplicate pairs, verified with exact
+    * Jaccard ≥ 0.5 over word 3-gram shingles — the one candidate-and-
+    * verify pipeline behind [[qMinhashNeardup]], [[qIncrementalDedup]]
+    * and [[qMinhashEstErr]]. Returns the verified (doc_a, doc_b,
+    * n_common, sz_a, sz_b) with doc_a < doc_b. `keep` restricts the
+    * candidate pairs before the verify: `lit(true)` keeps all (Catalyst
+    * prunes it), and a conjunct over one side's column is pushed below
+    * the band join to that side.
+    *
+    * Signature: ONE md5 per shingle, sliced into 8 disjoint 4-hex-char
+    * sub-hashes; minhash_j = min of slice j over the doc's shingles
+    * ([[minhashSigFused]]). An 8× cheaper signature than 8 seeded
+    * hashes; 16-bit slices add a ~1/2e5 per-band false-collision rate,
+    * which the exact verify absorbs (and the oracle replicates
+    * bit-for-bit).
+    *
+    * Plan hygiene: the signature, the capped bands, the candidates and
+    * the candidate shingle sets are each read more than once, and
+    * Catalyst shares no common subplans, so each is `.persist()`ed. The
+    * per-doc set size rides along in the signature, so sizing needs no
+    * extra pass.
+    *
+    * Candidates: band rows self-join on (band_idx, band_val) after
+    * hot groups are capped away (`maxBandGroup`) — both the group-size
+    * window and the join reuse the same hash partitioning, and the
+    * whole path is codegen'd. */
+  private def minhashVerified(spark: SparkSession, d: String, keep: Column): DataFrame = {
     val sig = minhashSigFused(spark, d).persist()
     val capped = minhashBands(sig)
       .withColumn("k", count(lit(1)).over(Window.partitionBy("band_idx", "band_val")))
@@ -526,7 +523,7 @@ object Quality {
     val cand = capped.select(col("band_idx"), col("band_val"), col("doc_id").as("doc_a"))
       .join(capped.select(col("band_idx"), col("band_val"), col("doc_id").as("doc_b")),
         Seq("band_idx", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
+      .filter(col("doc_a") < col("doc_b") && keep)
       .select("doc_a", "doc_b").distinct()
       .persist()
     // Exact verify on CANDIDATES ONLY: fetch the shingle set just for
@@ -547,12 +544,17 @@ object Quality {
       .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("jaccard", expr(
-        "round(n_common / cast(sz_a + sz_b - n_common AS DOUBLE), 4)"))
-      .filter(col("jaccard") >= 0.5)
-      .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
+      .filter(jaccard >= 0.5)
+      .select("doc_a", "doc_b", "n_common", "sz_a", "sz_b")
   }
+
+  /** Exact Jaccard of a verified pair, rounded to 4 places. */
+  private val jaccard = expr("round(n_common / cast(sz_a + sz_b - n_common AS DOUBLE), 4)")
+
+  def qMinhashNeardup(spark: SparkSession, d: String): DataFrame =
+    minhashVerified(spark, d, lit(true))
+      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
+      .orderBy("doc_a", "doc_b")
 
   /** Landed MinHash-LSH pair artifact: `qMinhashNeardup`'s exact output
     * materialized once per (sfDir, pipeline-version) through the same
@@ -569,13 +571,9 @@ object Quality {
     * fresh), so the oracle surface still verifies the full pipeline.
     * Bump the `_v1` key on any semantic change to the pair pipeline —
     * the marker-gated artifact would otherwise serve stale pairs. */
-  private[graft] def neardupPairs(spark: SparkSession, d: String): DataFrame = {
+  private[graft] def neardupPairs(spark: SparkSession, d: String): DataFrame =
     // r10: landed on TxTable (multi-JVM-safe version-0 claim)
-    val dir = graft.sources.Landing.table(spark, d, "lsh_pairs_v2") {
-      qMinhashNeardup(spark, d)
-    }
-    graft.sinks.TxTable.read(spark, dir)
-  }
+    graft.sources.Landing.table(spark, d, "lsh_pairs_v2")(qMinhashNeardup(spark, d))
 
   /** Near-dup threshold sensitivity sweep — the tuning table that
     * decides where a dedup run sets its Jaccard cutoff: for each 0.1
@@ -784,13 +782,9 @@ object Quality {
     * same write-once contract and rationale as [[neardupPairs]]; read
     * by the dedup blocking-recall audit and the spec ground-truth
     * clustering so neither re-derives the PPJoin pipeline. */
-  private[graft] def exactJaccardPairs(spark: SparkSession, d: String): DataFrame = {
+  private[graft] def exactJaccardPairs(spark: SparkSession, d: String): DataFrame =
     // r10: landed on TxTable (multi-JVM-safe version-0 claim)
-    val dir = graft.sources.Landing.table(spark, d, "ngram_pairs_v2") {
-      qNgramJaccard(spark, d)
-    }
-    graft.sinks.TxTable.read(spark, dir)
-  }
+    graft.sources.Landing.table(spark, d, "ngram_pairs_v2")(qNgramJaccard(spark, d))
 
   /** The naive all-shingles inverted-index join — the spec's ground
     * truth proving the prefix filter above is lossless. */
@@ -1398,42 +1392,13 @@ object Quality {
     * corpus ingestion at 100 TB: the index side's signatures are a
     * precomputed artifact (here recomputed for self-containment), the
     * new batch is small, and per-batch work scales with the batch's
-    * band collisions, not the corpus pair count. Same signature/band/
-    * cap/verify machinery as qMinhashNeardup. */
-  def qIncrementalDedup(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sig = minhashSigFused(spark, d).persist()
-    val capped = minhashBands(sig)
-      .withColumn("k", count(lit(1)).over(Window.partitionBy("band_idx", "band_val")))
-      .filter(col("k") <= maxBandGroup)
-      .persist()
-    val arrivals = capped.filter(col("doc_id") >= 400)
-      .select(col("band_idx"), col("band_val"), col("doc_id").as("new_doc"))
-    val index = capped.filter(col("doc_id") < 400)
-      .select(col("band_idx"), col("band_val"), col("doc_id").as("index_doc"))
-    val cand = arrivals.join(index, Seq("band_idx", "band_val"))
-      .select("new_doc", "index_doc").distinct()
-      .persist()
-    // candidate-only exact verify, same shape as qMinhashNeardup
-    val candDocs = cand
-      .select(explode(array(col("new_doc"), col("index_doc"))).as("doc_id")).distinct()
-    val sets = Tables.documents(spark, d)
-      .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(expr("word_shingles(text, 3)")).as("sh"))
-      .persist()
-    val sizes = sig.select(col("doc_id"), col("sz"))
-    cand
-      .join(sets.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), "new_doc")
-      .join(sets.select(col("doc_id").as("index_doc"), col("sh").as("sh_b")), "index_doc")
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .join(sizes.select(col("doc_id").as("new_doc"), col("sz").as("sz_a")), "new_doc")
-      .join(sizes.select(col("doc_id").as("index_doc"), col("sz").as("sz_b")), "index_doc")
-      .withColumn("jaccard", expr(
-        "round(n_common / cast(sz_a + sz_b - n_common AS DOUBLE), 4)"))
-      .filter(col("jaccard") >= 0.5)
-      .select("new_doc", "index_doc", "jaccard")
+    * band collisions, not the corpus pair count. Runs
+    * [[minhashVerified]] with the cross-watermark predicate, whose two
+    * halves Catalyst pushes below the band join to each side. */
+  def qIncrementalDedup(spark: SparkSession, d: String): DataFrame =
+    minhashVerified(spark, d, col("doc_a") < 400 && col("doc_b") >= 400)
+      .select(col("doc_b").as("new_doc"), col("doc_a").as("index_doc"), jaccard.as("jaccard"))
       .orderBy("new_doc", "index_doc")
-  }
 
   def qEntropy(spark: SparkSession, d: String): DataFrame =
     Tables.documentsSpread(spark, d)
@@ -1610,45 +1575,23 @@ object Quality {
     * worse dedup. Integer fixed-point (ppm) so the checked surface is
     * hash-exact; est granularity is 125000 ppm (1/8).
     *
-    * Scale shape: identical to qMinhashNeardup — band-bucketed
-    * candidates, hot-band cap, exact verify on candidates only; the
-    * signature columns ride the existing joins (8 × 4-char strings per
-    * doc), nothing new shuffles. */
+    * Scale shape: the pairs come from [[minhashVerified]]; the 8
+    * signature columns per side (8 × 4-char strings per doc) join onto
+    * the verified pairs only, read from the signature that pipeline
+    * persisted. */
   def qMinhashEstErr(spark: SparkSession, d: String): DataFrame = {
-    val sig = minhashSigFused(spark, d).persist()
-    val capped = minhashBands(sig)
-      .withColumn("k", count(lit(1)).over(Window.partitionBy("band_idx", "band_val")))
-      .filter(col("k") <= maxBandGroup)
-      .persist()
-    val cand = capped.select(col("band_idx"), col("band_val"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("band_idx"), col("band_val"), col("doc_id").as("doc_b")),
-        Seq("band_idx", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val candDocs = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-    val sets = Tables.documents(spark, d)
-      .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(expr("word_shingles(text, 3)")).as("sh"))
-    def side(tag: String) = sig.select(
-      col("doc_id").as(s"doc_$tag") +:
-        (0 until 8).map(j => col(s"m$j").as(s"${tag}_m$j")) :+
-        col("sz").as(s"sz_$tag"): _*)
+    def side(tag: String) = minhashSigFused(spark, d).select(
+      col("doc_id").as(s"doc_$tag") +: (0 until 8).map(j => col(s"m$j").as(s"${tag}_m$j")): _*)
     val nMatch = (0 until 8)
       .map(j => when(col(s"a_m$j") === col(s"b_m$j"), 1L).otherwise(0L))
       .reduce(_ + _)
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+    minhashVerified(spark, d, lit(true))
       .join(side("a"), "doc_a").join(side("b"), "doc_b")
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_common"))
-      .withColumn("jaccard", expr("round(n_common / cast(n_union AS DOUBLE), 4)"))
-      .filter(col("jaccard") >= 0.5)
-      .withColumn("jacc_ppm", expr("(n_common * 1000000) div n_union"))
-      .withColumn("est_ppm", (nMatch * 125000L).as("est_ppm"))
-      .withColumn("err_ppm", col("est_ppm") - col("jacc_ppm"))
-      .select("doc_a", "doc_b", "jaccard", "jacc_ppm", "est_ppm", "err_ppm")
+      .withColumn("n_common", col("n_common").cast("long"))
+      .withColumn("jacc_ppm", expr("(n_common * 1000000) div (sz_a + sz_b - n_common)"))
+      .withColumn("est_ppm", nMatch * 125000L)
+      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"), col("jacc_ppm"),
+        col("est_ppm"), (col("est_ppm") - col("jacc_ppm")).as("err_ppm"))
       .orderBy("doc_a", "doc_b")
   }
 

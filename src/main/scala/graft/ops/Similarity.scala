@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -80,30 +80,75 @@ object Similarity {
       .orderBy("probe_id", "rn")
   }
 
+  /** The seed codebook shared by IVF and PQ — the deterministic
+    * stand-in for k-means training: the rows with vec_id < 8, keyed as
+    * `centroid_id`, carrying `payload`. */
+  private def seedCentroids(df: DataFrame, payload: Column*): DataFrame =
+    df.filter(col("vec_id") < 8).select(col("vec_id").as("centroid_id") +: payload: _*)
+
+  /** IVF seed centroids `(centroid_id, ea, na)` over a [[withNorm]]ed frame. */
+  private def ivfSeeds(v: DataFrame): DataFrame =
+    seedCentroids(v, col("e").as("ea"), col("nrm").as("na"))
+
+  /** IVF points `(vec_id, eb, nb)` over a [[withNorm]]ed frame. */
+  private def ivfPoints(v: DataFrame): DataFrame =
+    v.select(col("vec_id"), col("e").as("eb"), col("nrm").as("nb"))
+
+  /** IVF centroid scoring, the one step every IVF query shares: each
+    * `(id, eb, nb)` point (`id` is its first column) against the
+    * broadcast `(centroid_id, ea, na)` centroids, with their `cos`. The
+    * corpus × centroids expansion happens inside each map task. */
+  private def centroidCos(points: DataFrame, centroids: DataFrame): DataFrame =
+    points.join(broadcast(centroids), lit(true))
+      .withColumn("cos", expr(s"$dot / (na * nb)"))
+
+  /** Each point's nearest centroid as `cluster`, plus the point's
+    * `carry` columns. A hash aggregate, not a window: `max_by`
+    * collapses the ×centroids expansion back to one row per point via
+    * map-side partial aggregation — nothing expanded ever shuffles, and
+    * there is no per-key sort. Tie-break matches the oracle's `ORDER BY
+    * cos DESC, centroid_id`: lexicographic max of (cos, -centroid_id). */
+  private def nearestCentroid(points: DataFrame, centroids: DataFrame,
+      carry: String*): DataFrame = {
+    val id = points.columns.head
+    centroidCos(points, centroids)
+      .groupBy(id)
+      .agg(max_by(struct(col("centroid_id") +: carry.map(col): _*),
+        struct(col("cos"), (-col("centroid_id")).as("neg_centroid"))).as("best"))
+      .select(col(id) +: col("best.centroid_id").as("cluster") +:
+        carry.map(c => col(s"best.$c").as(c)): _*)
+  }
+
+  /** Each point's centroids ranked: `rank` receives the sorted array of
+    * struct(neg_cos, centroid_id) — lexicographic, so cos DESC,
+    * centroid ASC — and names the one output column next to the id.
+    * The ×centroids expansion collapses map-side (collect_list partial
+    * aggregation concatenates locally, a point's candidate rows never
+    * leave their input partition); the ranking is a sort of a constant
+    * |centroids|-element array, not a window over the expanded corpus. */
+  private def rankedCentroids(points: DataFrame, centroids: DataFrame)(
+      rank: Column => Column): DataFrame = {
+    val id = points.columns.head
+    centroidCos(points, centroids)
+      .groupBy(id)
+      .agg(collect_list(
+        struct((-col("cos")).as("neg_cos"), col("centroid_id"))).as("cands"))
+      .select(col(id), rank(sort_array(col("cands"))))
+  }
+
+  /** Each point's top-`nprobe` centroids, one (id, cluster) row per probe. */
+  private def probedCentroids(points: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    val id = points.columns.head
+    rankedCentroids(points, centroids)(r => explode(slice(r, 1, nprobe)).as("c"))
+      .select(col(id), col("c.centroid_id").as("cluster"))
+  }
+
   /** IVF cluster assignment shared by the ANN and near-dup paths:
-    * centroids = vec_id < 8 (a deterministic stand-in for k-means
-    * training), every vector assigned to its nearest centroid.
-    *
-    * The assignment is a hash aggregate, not a window: the corpus ×
-    * centroids expansion happens inside each map task (centroids are
-    * broadcast) and `max_by` collapses it back to one row per vector
-    * via map-side partial aggregation — nothing ×8-expanded ever
-    * shuffles, and there is no per-key sort. Tie-break matches the
-    * oracle's `ORDER BY cos DESC, centroid_id`: lexicographic max of
-    * (cos, -centroid_id). */
+    * every vector assigned to its nearest seed centroid. */
   private[graft] def ivfAssigned(spark: SparkSession, d: String): DataFrame = {
     val v = withNorm(spark, Tables.embeddings(spark, d))
-    val centroids = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("e").as("ea"), col("nrm").as("na"))
-    val corpus = v.select(col("vec_id"), col("e").as("eb"), col("nrm").as("nb"))
-    corpus.join(broadcast(centroids), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("vec_id")
-      .agg(max_by(
-        struct(col("centroid_id"), col("eb"), col("nb")),
-        struct(col("cos"), (-col("centroid_id")).as("neg_centroid"))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("cluster"),
-        col("best.eb").as("eb"), col("best.nb").as("nb"))
+    nearestCentroid(ivfPoints(v), ivfSeeds(v), "eb", "nb")
   }
 
   /** IVF-bucketed ANN: probes (vec_id < 5) search only their own
@@ -129,25 +174,10 @@ object Similarity {
 
   /** Multi-probe IVF assignment: each vector's top-`nprobe` centroids,
     * one (cluster, vec_id) row per probe. Same shuffle shape as
-    * `ivfAssigned` — the ×8 centroid expansion collapses map-side
-    * (collect_list partial aggregation concatenates locally, the 8
-    * candidate rows of a vector never leave their input partition), the
-    * per-vector top-k is a sort of a constant 8-element array, not a
-    * window over the expanded corpus. */
+    * `ivfAssigned` (see [[rankedCentroids]]). */
   private[graft] def ivfAssignedK(spark: SparkSession, d: String, nprobe: Int): DataFrame = {
     val v = withNorm(spark, Tables.embeddings(spark, d))
-    val centroids = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("e").as("ea"), col("nrm").as("na"))
-    val corpus = v.select(col("vec_id"), col("e").as("eb"), col("nrm").as("nb"))
-    corpus.join(broadcast(centroids), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("vec_id")
-      .agg(collect_list(
-        struct((-col("cos")).as("neg_cos"), col("centroid_id"))).as("cands"))
-      // lexicographic sort on (-cos, centroid_id) == cos DESC, centroid ASC
-      .select(col("vec_id"),
-        explode(slice(sort_array(col("cands")), 1, nprobe)).as("c"))
-      .select(col("vec_id"), col("c.centroid_id").as("cluster"))
+    probedCentroids(ivfPoints(v), ivfSeeds(v), nprobe)
   }
 
   /** Embedding-cosine near-duplicate pairs (cos ≥ 0.45), bucketed:
@@ -228,20 +258,11 @@ object Similarity {
       .agg(min("vec_id").as("gid"), count(lit(1)).as("g"))
       .withColumn("nrm", expr("sqrt(vec_dot(e, e))"))
       .persist()
-    // content-level nprobe=2 IVF assignment (ivfAssignedK's exact
-    // recipe over group representatives; centroids stay the raw
-    // vec_id < 8 member vectors, so assignment ties break identically)
-    val centroids = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("e").as("ea"), col("nrm").as("na"))
-    val asg = groups.select(col("gid"), col("e").as("eb"), col("nrm").as("nb"))
-      .join(broadcast(centroids), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("gid")
-      .agg(collect_list(
-        struct((-col("cos")).as("neg_cos"), col("centroid_id"))).as("cands"))
-      .select(col("gid"),
-        explode(slice(sort_array(col("cands")), 1, 2)).as("c"))
-      .select(col("gid"), col("c.centroid_id").as("cluster"))
+    // content-level nprobe=2 IVF assignment: probedCentroids over group
+    // representatives; centroids stay the raw vec_id < 8 member
+    // vectors, so assignment ties break identically
+    val asg = probedCentroids(
+      groups.select(col("gid"), col("e").as("eb"), col("nrm").as("nb")), ivfSeeds(v), 2)
     // unordered content candidate pairs sharing ≥1 probed cluster;
     // the self-pair stands for a group's internal member pairs, so it
     // exists only for groups of ≥2
@@ -279,13 +300,9 @@ object Similarity {
     * same write-once contract as Quality.neardupPairs: the embedding
     * dedup clustering reads the materialized pair stream instead of
     * re-deriving the IVF-candidate + cosine-verify subtree. */
-  private[graft] def embedNeardupPairs(spark: SparkSession, d: String): DataFrame = {
+  private[graft] def embedNeardupPairs(spark: SparkSession, d: String): DataFrame =
     // r10: landed on TxTable (multi-JVM-safe version-0 claim)
-    val dir = graft.sources.Landing.table(spark, d, "embed_pairs_v2") {
-      qEmbedNeardup(spark, d)
-    }
-    graft.sinks.TxTable.read(spark, dir)
-  }
+    graft.sources.Landing.table(spark, d, "embed_pairs_v2")(qEmbedNeardup(spark, d))
 
   /** SemDeDup-style threshold sweep (Abbas et al. 2023, "SemDeDup:
     * data-efficient learning at web-scale through semantic
@@ -462,19 +479,9 @@ object Similarity {
     * (standard Lloyd behavior), identically on both sides. */
   def qKmeansTrain(spark: SparkSession, d: String): DataFrame = {
     val v = withNorm(spark, Tables.embeddings(spark, d))
-    val corpus = v.select(col("vec_id"), col("e").as("eb"), col("nrm").as("nb"))
-      .persist() // one scan per Lloyd round
-    def assign(c: DataFrame): DataFrame = corpus.join(broadcast(c), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("eb")),
-        struct(col("cos"), (-col("centroid_id")).as("neg_centroid"))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("cluster"),
-        col("best.eb").as("eb"))
-    var cents = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("long").as("centroid_id"),
-        col("e").as("ea"), col("nrm").as("na"))
-      .localCheckpoint()
+    val corpus = ivfPoints(v).persist() // one scan per Lloyd round
+    def assign(c: DataFrame): DataFrame = nearestCentroid(corpus, c, "eb")
+    var cents = ivfSeeds(v).localCheckpoint()
     for (_ <- 1 to 2) {
       cents = assign(cents)
         .select(col("cluster"), posexplode(col("eb")).as(Seq("dim", "x")))
@@ -628,9 +635,7 @@ object Similarity {
 
   /** The 32-row sub-codebook (8 centroids × 4 subspaces). */
   private def pqCodebook(spark: SparkSession, d: String): DataFrame =
-    pqSubs(spark, d).filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("m").as("cm"),
-        col("sa").as("sb"), col("daa").as("dbb"))
+    seedCentroids(pqSubs(spark, d), col("m").as("cm"), col("sa").as("sb"), col("daa").as("dbb"))
 
   private[graft] def pqAssign(spark: SparkSession, d: String): DataFrame =
     pqSubs(spark, d)
@@ -1139,19 +1144,10 @@ object Similarity {
       .toDF("e", "pfx")
       .withColumn("pg", expr("pfx[0]._2 div 16")) // smallest vec_id IS the gid
       .select("pg", "pfx")
-    // content-level nprobe=2 IVF assignment (ivfAssignedK's recipe over
-    // group reps; centroids are the raw vec_id<8 member vectors)
-    val centroids = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("e").as("ea"), col("nrm").as("na"))
-    val asg = groups.select(col("gid"), col("e").as("eb"), col("nrm").as("nb"))
-      .join(broadcast(centroids), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("gid")
-      .agg(collect_list(
-        struct((-col("cos")).as("neg_cos"), col("centroid_id"))).as("cands"))
-      .select(col("gid"),
-        explode(slice(sort_array(col("cands")), 1, 2)).as("c"))
-      .select(col("gid"), col("c.centroid_id").as("cluster"))
+    // content-level nprobe=2 IVF assignment: probedCentroids over group
+    // reps; centroids are the raw vec_id<8 member vectors
+    val asg = probedCentroids(
+      groups.select(col("gid"), col("e").as("eb"), col("nrm").as("nb")), ivfSeeds(v), 2)
     // group-level candidate pairs: share ≥1 probed cluster; the
     // self-pair stands for a member's g−1 co-duplicates, so it exists
     // only for groups of ≥2
@@ -1484,15 +1480,6 @@ object Similarity {
       .orderBy("cluster")
   }
 
-  /** IVF assignment-margin audit: per cluster, how decisively its
-    * members chose it — margin = cos(best centroid) − cos(second
-    * best). A thin average margin means the cell boundary cuts
-    * through dense data and single-probe recall will be poor there
-    * (the per-cell companion to the global q_ann_recall number, and
-    * the signal that picks WHICH cells need nprobe>1 or a re-train).
-    * The per-vector top-2 is a map-side sort of the constant 8-entry
-    * (−cos, centroid) array — the ivfAssignedK shape, no window over
-    * the expanded corpus; the average is decimal-pinned. */
   /** Label-separability audit: the pairwise cosine between per-label
     * embedding CENTROIDS — the class-confusability matrix a labeled
     * training corpus is triaged with (two labels whose centroids sit
@@ -1530,18 +1517,21 @@ object Similarity {
       .orderBy("label_a", "label_b")
   }
 
+  /** IVF assignment-margin audit: per cluster, how decisively its
+    * members chose it — margin = cos(best centroid) − cos(second
+    * best). A thin average margin means the cell boundary cuts
+    * through dense data and single-probe recall will be poor there
+    * (the per-cell companion to the global q_ann_recall number, and
+    * the signal that picks WHICH cells need nprobe>1 or a re-train).
+    * The per-vector top-2 reads [[rankedCentroids]] (the ivfAssignedK
+    * shape, no window over the expanded corpus); the average is
+    * decimal-pinned. */
   def qIvfMargin(spark: SparkSession, d: String): DataFrame = {
     val v = withNorm(spark, Tables.embeddings(spark, d))
-    val centroids = v.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("centroid_id"), col("e").as("ea"), col("nrm").as("na"))
-    val corpus = v.select(col("vec_id"), col("e").as("eb"), col("nrm").as("nb"))
-    corpus.join(broadcast(centroids), lit(true))
-      .withColumn("cos", expr(s"$dot / (na * nb)"))
-      .groupBy("vec_id")
-      .agg(sort_array(collect_list(struct((-col("cos")).as("nc"),
-        col("centroid_id")))).as("ranked"))
+    rankedCentroids(ivfPoints(v), ivfSeeds(v))(_.as("ranked"))
       .select(col("vec_id"), col("ranked")(0).getField("centroid_id").as("cluster"),
-        (col("ranked")(1).getField("nc") - col("ranked")(0).getField("nc")).as("margin"))
+        (col("ranked")(1).getField("neg_cos") - col("ranked")(0).getField("neg_cos"))
+          .as("margin"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_vecs"),
         (sum(col("margin").cast("decimal(18,12)")).cast("double") / count(lit(1)))

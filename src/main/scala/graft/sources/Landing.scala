@@ -91,10 +91,10 @@ object Landing {
   }
 
   /** [[dir]] for artifacts that are TABLES (the shared pair/edge
-    * artifacts): the frame is staged as parquet, and consumers read
-    * the landing path via `TxTable.read(spark, path)`. */
-  def table(spark: SparkSession, sfDir: String, kind: String)(write: => DataFrame): String =
-    land(spark, sfDir, kind)(TxTable.commitOnce(write, _))
+    * artifacts): the frame is staged as parquet, and the landed table
+    * is returned as read through its log (`TxTable.read`). */
+  def table(spark: SparkSession, sfDir: String, kind: String)(write: => DataFrame): DataFrame =
+    TxTable.read(spark, land(spark, sfDir, kind)(TxTable.commitOnce(write, _)))
 
   /** The landing path for (sfDir, kind), running the landing `commit`
     * (timed) first iff the table there is not yet initialized. */

@@ -183,6 +183,18 @@ class MarginalTailsSpec extends SparkSpec {
     }
   }
 
+  test("chi2: a lang seen only with a NULL source gives a NULL part, not an error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_chi2_").toString
+    write(dir, "documents", StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("lang", StringType),
+      StructField("source", StringType), StructField("n_chars", LongType))),
+      Seq(("en", "web"), ("en", "wiki"), ("de", "web"), ("es", null))
+        .zipWithIndex.map { case ((l, s), i) => Row(i.toLong, s"t$i", l, s, 10L + i) })
+    // the oracle SQL's result on this table under DuckDB
+    assert(Inventory.qChi2Test(spark, dir).collect().toSeq ==
+      Seq(Row("de", 1L, 2L, 0.5), Row("en", 2L, 2L, 0.25), Row("es", 0L, 2L, null)))
+  }
+
   test("each rewritten tail equals its two-step formulation on the fixture corpus") {
     for ((name, rewritten, joined) <- pairs)
       assert(rewritten(spark, sfDir).collect().toSeq == joined(spark, sfDir).collect().toSeq, name)

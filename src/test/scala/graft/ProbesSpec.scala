@@ -40,5 +40,28 @@ class ProbesSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val p2 = Probes.embeddings(spark, dir)
     assert(p2.n == 3 && p2.ndContent == 3 && p2.contentDupFree)
+    // rewrite one part file and its checksum in place, as a directory
+    // table's writer may: the directory's own mtime and length stay as
+    // they were, only that part file's stamp moves
+    import java.nio.file.{Files, Path}
+    val table = new java.io.File(s"$dir/embeddings.parquet")
+    def partAndCrc(t: java.io.File): Seq[Path] = {
+      val part = t.list().filter(n => n.startsWith("part-") && n.endsWith(".parquet")).min
+      Seq(part, s".$part.crc").map(t.toPath.resolve(_))
+    }
+    val fresh = new java.io.File(
+      Files.createTempDirectory("graft_probe_part_").toFile, "embeddings.parquet")
+    Seq.tabulate(4)(i => (10L + i, e1.map(_ * 7f), 1))
+      .toDF("vec_id", "embedding", "label").coalesce(1)
+      .write.parquet(fresh.getPath)
+    val dirStamp = (table.lastModified, table.length)
+    partAndCrc(table).zip(partAndCrc(fresh)).foreach { case (old, neu) =>
+      Files.write(old, Files.readAllBytes(neu))
+    }
+    assert((table.lastModified, table.length) == dirStamp)
+    val p3 = Probes.embeddings(spark, dir)
+    // the replacement part holds 4 rows of one content, so the count moves
+    assert(p3.n == spark.read.parquet(table.getPath).count() && p3.n != p2.n)
+    assert(!p3.contentDupFree)
   }
 }

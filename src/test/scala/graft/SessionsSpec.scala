@@ -70,4 +70,14 @@ class SessionsSpec extends SparkSpec {
     check("src/main", """\$\{\w+\.length\}:\$\{\w+\.lastModified\}""", "Tables.scala")
     check("src/main", "_txlog", "TxTable.scala")
   }
+
+  test("drift guard: each near-dup index step is written once") {
+    def occurrences(root: String, literal: String): Int =
+      Files.walk(Paths.get(root)).iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => java.util.regex.Pattern.quote(literal).r
+          .findAllMatchIn(Files.readString(p)).size).sum
+    for (step <- Seq("""Window.partitionBy("band_idx", "band_val")""", // the LSH hot-band cap
+        """col("vec_id").as("centroid_id")""")) // the seed codebook
+      assert(occurrences("src/main", step) == 1, step)
+  }
 }
