@@ -88,7 +88,7 @@ object BenchStream {
         .otherwise(col("props")).as("content"))
       .repartition(32)
       .write.mode("overwrite").parquet(ingestIn)
-    val ingestSchema = spark.read.parquet(ingestIn).schema
+    val ingestSchema = ParquetMeta.schema(spark, ingestIn)
     val stations = spark.range(50)
       .select(col("id").as("station_id"),
         concat(lit("STA_"), col("id")).as("station"))
@@ -118,7 +118,7 @@ object BenchStream {
       .select((col("doc_id") + col("rep") * 10000000L).as("doc_id"), col("text"))
       .repartition(64)
       .write.mode("overwrite").parquet(gateIn)
-    val gateSchema = spark.read.parquet(gateIn).schema
+    val gateSchema = ParquetMeta.schema(spark, gateIn)
     val indexDocs = corpus
 
     def runGate(): (Double, Long, Long, Long) = drain { () =>
@@ -145,7 +145,7 @@ object BenchStream {
       .repartitionByRange(8, col("ts"))
       .sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(sessIn)
-    val sessSchema = spark.read.parquet(sessIn).schema
+    val sessSchema = ParquetMeta.schema(spark, sessIn)
 
     def runSessionize(): (Double, Long, Long, Long) = drain { () =>
       val src = spark.readStream.schema(sessSchema)
@@ -166,7 +166,7 @@ object BenchStream {
       col("event_id"), col("event_type").as("op"), col("value"))
       .repartition(8)
       .write.mode("overwrite").parquet(cdcIn)
-    val cdcSchema = spark.read.parquet(cdcIn).schema
+    val cdcSchema = ParquetMeta.schema(spark, cdcIn)
 
     def runCdc(): (Double, Long, Long, Long) = drain { () =>
       val src = spark.readStream.schema(cdcSchema)
@@ -192,7 +192,7 @@ object BenchStream {
         col("embedding"))
       .repartition(64)
       .write.mode("overwrite").parquet(qgIn)
-    val qgSchema = spark.read.parquet(qgIn).schema
+    val qgSchema = ParquetMeta.schema(spark, qgIn)
     graft.ops.Classifier.weightsTable(spark, sfDir).count() // land, untimed
 
     def runQGate(): (Double, Long, Long, Long) = drain { () =>

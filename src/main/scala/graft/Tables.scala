@@ -5,25 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** Table loaders for the driver testdata (TESTDATA.md).
   *
-  * One parquet file per table under `sfDir`. Reads are plain
-  * `spark.read.parquet` so Catalyst's parquet scan handles column
-  * pruning + predicate pushdown; at 100 TB the same call points at a
-  * partitioned directory tree and partition pruning applies unchanged.
+  * One parquet file per table under `sfDir`. Reads are
+  * `spark.read.schema(...).parquet` so Catalyst's parquet scan handles
+  * column pruning + predicate pushdown; at 100 TB the same call points
+  * at a partitioned directory tree and partition pruning applies
+  * unchanged.
   */
 object Tables {
-  /** r12: the RESOLVED frame is memoized per (session, path, source
-    * fingerprint). Every `spark.read.parquet` call pays driver-side
-    * file listing + footer schema inference at analysis time — ~10-20
-    * ms each, and the bench surface makes ~3 such calls per query per
-    * pass (measured: a double-digit-second driver tax across a full
-    * 302-query bench). DataFrames are immutable plans, so handing every
-    * caller the same object changes nothing downstream; each action
-    * still scans the parquet files — this caches SCHEMA RESOLUTION,
-    * never data. A metadata fingerprint (name/mtime/length, one level
-    * deep — a couple of stat calls, the Landing pattern) guards the
-    * memo: a REWRITTEN path (spec fixtures regenerate in-session;
-    * LandingSpec's corpus-swap cases) re-resolves instead of serving a
-    * stale file list. */
+  /** The RESOLVED frame is memoized per (session, path, source
+    * fingerprint). Resolution lists the path and reads ONE footer on
+    * the driver ([[ParquetMeta.schema]]) — no Spark job, where a plain
+    * `spark.read.parquet` starts a schema-inference job per call.
+    * DataFrames are immutable plans, so handing every caller the same
+    * object changes nothing downstream; each action still scans the
+    * parquet files — this caches SCHEMA RESOLUTION, never data. A
+    * metadata fingerprint (name/mtime/length, one level deep — a couple
+    * of stat calls, the Landing pattern) guards the memo: a REWRITTEN
+    * path (spec fixtures regenerate in-session; LandingSpec's
+    * corpus-swap cases) re-resolves instead of serving a stale file
+    * list. */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
 
@@ -70,8 +70,12 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = s"$sfDir/$name.parquet"
-    memo(spark, p, p)(spark.read.parquet(p))
+    memo(spark, p, p)(read(spark, p))
   }
+
+  /** A parquet read whose schema comes from a footer: no job. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetMeta.schema(spark, path)).parquet(path)
 
   def region(spark: SparkSession, d: String): DataFrame = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame = table(spark, d, "nation")
@@ -160,7 +164,7 @@ object Tables {
       // caller's explicit session configuration is never overwritten.
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$d/events.parquet")
+      val raw = read(spark, s"$d/events.parquet")
       raw.schema("ts").dataType.typeName match {
         // Integer `div`, NOT `/`: long/1000 promotes to double, and epoch
         // nanos (~1.7e18) exceed double's 53-bit mantissa — off-by-1 µs.

@@ -201,19 +201,6 @@ object Multimodal {
       }.toDF("doc_id", "n_frames", "frames_md5")
   }
 
-  /** STUB frame sampling: every `stride`-th byte as a "frame" — the
-    * plumbing (binary in, array-of-binary out, no shuffle) is what a
-    * video frame sampler needs. */
-  def frameSample(df: DataFrame, stride: Int): DataFrame =
-    // empty-payload guard: sequence(start, stop, step) THROWS when
-    // start > stop with a positive step (Spark ANSI), so a zero-byte
-    // payload must short-circuit to an empty frame list
-    df.withColumn("frames", expr(
-      s"""CASE WHEN octet_length(content) >= 1
-         |  THEN transform(sequence(1, octet_length(content), $stride),
-         |                 i -> substring(content, i, 1))
-         |  ELSE CAST(array() AS ARRAY<BINARY>) END""".stripMargin))
-
   /** STUB decode + RESIZE: the payload's first bytes laid out as a
     * 16-wide "image" (h = length div 16 rows, capped at 16), then
     * downsampled 2× per axis by 2×2 block averaging — completing the

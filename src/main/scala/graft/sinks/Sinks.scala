@@ -1,9 +1,13 @@
 package graft.sinks
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+
+import graft.{ParquetMeta, Tables}
 
 /** Sink-side operators (SURVEY.md §2.1 R16/R22).
   *
@@ -44,7 +48,13 @@ object Sinks {
     * reference's keep-on-mismatch rule (upload_to_rfs.py:206-216).
     * Verification is the DELTA at the destination (`after − before ==
     * expected`), not `after >= expected`: a destination pre-populated
-    * by earlier moves must not vouch for a partial copy. */
+    * by earlier moves must not vouch for a partial copy. All three
+    * counts are footer metadata ([[ParquetMeta.rowCount]]), read from
+    * the destination itself after the copy, so the copy is the move's
+    * only Spark job. The source count covers every data file under
+    * it, so a file its partitioned read would not see (a flat file at
+    * the root of a partitioned tree) fails the check and the source
+    * is kept. */
   def moveVerified(spark: SparkSession, srcDir: String, dstDir: String): (Long, Boolean) =
     moveVerifiedImpl(spark, srcDir, dstDir,
       (df, dst) => df.write.mode(SaveMode.Append).parquet(dst))
@@ -54,14 +64,10 @@ object Sinks {
   private[graft] def moveVerifiedImpl(
       spark: SparkSession, srcDir: String, dstDir: String,
       copy: (org.apache.spark.sql.DataFrame, String) => Unit): (Long, Boolean) = {
-    val src = spark.read.parquet(srcDir)
-    val expected = src.count()
-    val dstPath = new Path(dstDir)
-    val dstFs = dstPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val landedBefore =
-      if (dstFs.exists(dstPath)) spark.read.parquet(dstDir).count() else 0L
-    copy(src, dstDir)
-    val landedAfter = spark.read.parquet(dstDir).count()
+    val expected = ParquetMeta.rowCount(spark, srcDir)
+    val landedBefore = ParquetMeta.rowCount(spark, dstDir)
+    copy(Tables.read(spark, srcDir), dstDir)
+    val landedAfter = ParquetMeta.rowCount(spark, dstDir)
     if (landedAfter - landedBefore == expected && expected > 0) {
       val p = new Path(srcDir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -93,7 +99,7 @@ object Sinks {
     val totalBytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new Path(p.getParent, p.getName + "._compacting")
-    spark.read.parquet(dir).repartition(nOut)
+    Tables.read(spark, dir).repartition(nOut)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val out = fs.listStatus(tmp).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val old = new Path(p.getParent, p.getName + "._old")
@@ -112,12 +118,29 @@ object Sinks {
     * partitioned sink (e.g. a [[writeDatePartitioned]] root) is
     * appended to partitioned by its own columns — flat files at its
     * root would be invisible to its partitioned read — with a missing
-    * `date_part` derived as [[writeDatePartitioned]] derives it. */
+    * `date_part` derived as [[writeDatePartitioned]] derives it.
+    *
+    * The sink's schema comes from a footer and the row count from an
+    * [[Observation]] on the one write, so the anti join runs once and
+    * no job is spent on a schema or a count. A zero-row write still
+    * lands an empty part file (a flat one) and `_SUCCESS`. Into an
+    * existing sink, only what such a write adds is removed again: new
+    * top-level `part-` files holding no rows, and a `_SUCCESS` that was
+    * not there before; anything else new (another writer's
+    * `_temporary`, a part file with rows) stays. Into a missing sink,
+    * the first directory the write created (`path` or one of its
+    * missing parents) is removed. So a re-run with nothing new leaves
+    * the sink as it found it. */
   def appendNew(spark: SparkSession, df: DataFrame, key: String, path: String): Long = {
-    val existing =
-      if (new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(new Path(path))) Some(spark.read.parquet(path))
-      else None
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def firstMissing(p: Path): Path =
+      if (p.getParent == null || fs.exists(p.getParent)) p else firstMissing(p.getParent)
+    // the sink's names, or the first directory a write into it would create
+    val before: Either[Path, Set[String]] =
+      try Right(fs.listStatus(root).map(_.getPath.getName).toSet)
+      catch { case _: FileNotFoundException => Left(firstMissing(root)) }
+    val existing = before.toOption.map(_ => Tables.read(spark, path))
     val partCols = existing.toSeq.flatMap(_.queryExecution.analyzed.collectFirst {
       case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.partitionSchema.fieldNames
     }).flatten
@@ -125,13 +148,18 @@ object Sinks {
       if (partCols.contains("date_part") && !df.columns.contains("date_part")) withDatePart(df)
       else df
     val fresh = existing.fold(shaped)(e => shaped.join(e.select(key), Seq(key), "left_anti"))
-    // persist so the anti-join runs once, not once for the count and
-    // again for the write
-    fresh.persist()
-    try {
-      val n = fresh.count()
-      if (n > 0) fresh.write.mode(SaveMode.Append).partitionBy(partCols: _*).parquet(path)
-      n
-    } finally fresh.unpersist()
+    val written = Observation()
+    fresh.observe(written, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Append).partitionBy(partCols: _*).parquet(path)
+    val n = written.get("n").asInstanceOf[Long]
+    if (n == 0) before match {
+      case Left(made) => fs.delete(made, true)
+      case Right(names) => fs.listStatus(root).filter { st =>
+        val name = st.getPath.getName
+        !names(name) && st.isFile && (name == "_SUCCESS" ||
+          name.startsWith("part-") && ParquetMeta.rowCount(spark, st.getPath.toString) == 0)
+      }.foreach(st => fs.delete(st.getPath, false))
+    }
+    n
   }
 }

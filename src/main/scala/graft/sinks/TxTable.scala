@@ -556,22 +556,16 @@ object TxTable {
   }
 
   /** Runs `write` into a fresh writer-private directory; returns it
-    * (table-relative), every data file under it recursively (names
-    * starting `_` or `.` are writer metadata, as in Spark's scans),
-    * and, if `footers`, footer stats for the parquet ones. */
+    * (table-relative), every data file under it as a Spark scan sees
+    * them ([[graft.ParquetMeta.dataFiles]]), and, if `footers`, footer
+    * stats for the parquet ones. */
   private def stage(spark: SparkSession, table: String, footers: Boolean = true)(
       write: String => Unit): (String, Seq[String], Map[String, String]) = {
     val rel = s"data/${java.util.UUID.randomUUID()}"
     write(s"$table/$rel")
     val dir = new Path(s"$table/$rel")
     val fs = fsOf(spark, dir)
-    def walk(p: Path, prefix: String): Seq[String] = fs.listStatus(p).toSeq.flatMap { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_") || name.startsWith(".")) Nil
-      else if (st.isDirectory) walk(st.getPath, s"$prefix/$name")
-      else Seq(s"$prefix/$name")
-    }
-    val added = if (fs.exists(dir)) walk(dir, rel).sorted else Nil
+    val added = graft.ParquetMeta.dataFiles(fs, dir).map { case (f, _) => s"$rel/$f" }
     // footer stats per staged file (metadata-only, best-effort): the
     // data-skipping half of the commit
     val stats = added.filter(f => footers && f.endsWith(".parquet")).flatMap(f =>

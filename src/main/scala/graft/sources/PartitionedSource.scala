@@ -27,7 +27,7 @@ object PartitionedSource {
       Tables.orders(spark, d)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     }
-    spark.read.parquet(dir)
+    Tables.read(spark, dir)
       .filter(col("o_orderstatus") === "O")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),

@@ -108,7 +108,7 @@ class ClassifierSpec extends SparkSpec {
     // there, and qPerceptronEval reports it): y encoded in dim 0 with
     // per-row noise in dims 1-2, so training splits and the gate
     // accepts a strict, non-empty subset.
-    val dir = java.nio.file.Files.createTempDirectory("graft_qgate_").toString
+    val dir = tempDir("graft_qgate_")
     val fixture = (0 until 64).map { i =>
       val y = if (i % 2 == 0) 1.0f else -1.0f
       (i.toLong, Array(y * (0.5f + 0.01f * (i % 7)),
@@ -142,7 +142,7 @@ class ClassifierSpec extends SparkSpec {
 
   test("the perceptron landing runs one job per epoch plus a constant") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_perc_jobs_").toString
+    val dir = tempDir("graft_perc_jobs_")
     (0 until 16).map(i => (i.toLong, Array(0.5f - 0.0625f * i, 0.125f * (i % 3)), i % 3))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -156,7 +156,7 @@ class ClassifierSpec extends SparkSpec {
 
   test("an empty corpus lands an empty weights table and scores nothing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_perc_empty_").toString
+    val dir = tempDir("graft_perc_empty_")
     Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val w = Classifier.weightsTable(spark, dir)
@@ -168,7 +168,7 @@ class ClassifierSpec extends SparkSpec {
 
   test("a separable corpus converges after epoch 1: later epochs apply the zero update") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_perc_").toString
+    val dir = tempDir("graft_perc_")
     // y = +1 rows live at +1.0 on dim 0, y = −1 rows at −1.0 (labels
     // 0/1 give the parity target); epoch 1 sets w[0] = Σ y·x₀ > 0 and
     // b = 0 (balanced classes), which classifies everything with

@@ -62,7 +62,7 @@ class FileFormatSpec extends SparkSpec {
     // This pins Spark's three parser modes on a file with 3 good and
     // 2 broken records (the reference's placeholder-row philosophy,
     // app.py:315-334, applied at the parser layer).
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson_").toFile
+    val dir = new java.io.File(tempDir("graft_badjson_"))
     val f = new java.io.File(dir, "feed.jsonl")
     val w = new java.io.PrintWriter(f)
     w.println("""{"id": 1, "station": "BEDF"}""")

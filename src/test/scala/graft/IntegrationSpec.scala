@@ -16,7 +16,7 @@ class IntegrationSpec extends SparkSpec {
   test("foreachBatch + appendNew: replayed batch writes nothing twice") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val sink = Files.createTempDirectory("graft_stream_sink_").toString + "/out"
+    val sink = tempDir("graft_stream_sink_") + "/out"
     val input = MemoryStream[(Long, String)]
     val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = input.toDF().toDF("id", "payload").writeStream
@@ -55,7 +55,7 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("AvailableNow file stream skips already-processed files on re-run (R19+R9)") {
-    val base = Files.createTempDirectory("graft_incr_").toString
+    val base = tempDir("graft_incr_")
     val srcDir = s"$base/src"
     val ckpt = s"$base/ckpt"
     val outDir = s"$base/out"
@@ -125,7 +125,7 @@ class IntegrationSpec extends SparkSpec {
     import graft.ops.Multimodal
     // land 20 payloads as loose binary objects, exactly the reference's
     // per-chunk files in a bucket
-    val dir = Files.createTempDirectory("graft_payloads_").toString
+    val dir = tempDir("graft_payloads_")
     val docs = Tables.documents(spark, sfDir)
       .orderBy("doc_id").limit(20).collect()
     docs.foreach { r =>

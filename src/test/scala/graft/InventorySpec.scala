@@ -225,7 +225,7 @@ class InventorySpec extends SparkSpec {
       rows.filterNot(_.getBoolean(4)).mkString(", "))
     // plant violations in a scratch copy: an orphan lineitem (FK), a
     // null user (not-null), an out-of-range quantity
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq").toString
+    val dir = tempDir("graft_dq")
     for (t <- Seq("orders", "customer"))
       Tables.table(spark, sfDir, t).write.parquet(s"$dir/$t.parquet")
     Tables.lineitem(spark, sfDir)

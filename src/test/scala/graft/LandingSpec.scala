@@ -16,7 +16,7 @@ import graft.sources.Landing
 class LandingSpec extends SparkSpec {
 
   private def freshSfDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_landing_sf_").toString
+    tempDir("graft_landing_sf_")
 
   /** Version 0 is committed at the landing path `dir` was served from
     * (`dir` is that path's `data/<attemptId>` staging directory). */
@@ -104,7 +104,7 @@ class LandingSpec extends SparkSpec {
   test("distinct corpus paths with identical sanitized names never share a sweep scope") {
     // /x/sf-1 and /x/sf_1 both sanitize to _x_sf_1; the raw-path hash in
     // the prefix must keep their landings (and sweeps) fully disjoint.
-    val parent = java.nio.file.Files.createTempDirectory("graft_landing_twin_").toString
+    val parent = tempDir("graft_landing_twin_")
     val sfA = s"$parent/sf-1"
     val sfB = s"$parent/sf_1"
     new File(sfA).mkdirs()

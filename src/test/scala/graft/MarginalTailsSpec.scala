@@ -119,7 +119,7 @@ class MarginalTailsSpec extends SparkSpec {
     * and whose top revenue is tied between suppliers 1 and 2 and a NULL
     * supplier key. `nullTop` instead gives the NULL key the max alone. */
   private def fixture(nullTop: Boolean): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tails_").toString
+    val dir = tempDir("graft_tails_")
     write(dir, "documents", StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType), StructField("lang", StringType),
       StructField("source", StringType), StructField("n_chars", LongType))),
@@ -184,7 +184,7 @@ class MarginalTailsSpec extends SparkSpec {
   }
 
   test("chi2: a lang seen only with a NULL source gives a NULL part, not an error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_chi2_").toString
+    val dir = tempDir("graft_chi2_")
     write(dir, "documents", StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType), StructField("lang", StringType),
       StructField("source", StringType), StructField("n_chars", LongType))),

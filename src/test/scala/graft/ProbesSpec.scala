@@ -26,7 +26,7 @@ class ProbesSpec extends SparkSpec {
 
   test("rewriting a fixture dir invalidates its cached probe") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_probe_fix_").toString
+    val dir = tempDir("graft_probe_fix_")
     val e1 = Array.tabulate(16)(i => 0.1f * i)
     Seq((0L, e1, 1), (1L, e1, 2))
       .toDF("vec_id", "embedding", "label")
@@ -50,7 +50,7 @@ class ProbesSpec extends SparkSpec {
       Seq(part, s".$part.crc").map(t.toPath.resolve(_))
     }
     val fresh = new java.io.File(
-      Files.createTempDirectory("graft_probe_part_").toFile, "embeddings.parquet")
+      new java.io.File(tempDir("graft_probe_part_")), "embeddings.parquet")
     Seq.tabulate(4)(i => (10L + i, e1.map(_ * 7f), 1))
       .toDF("vec_id", "embedding", "label").coalesce(1)
       .write.parquet(fresh.getPath)

@@ -58,7 +58,7 @@ class QualitySpec extends SparkSpec {
     // expansion (1100^2/2 pairs never materialize); an unrelated
     // planted near-dup pair must still come through on its own bands.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotband").toString
+    val dir = tempDir("graft_hotband")
     val blobText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val blob = (1L to 1100L).map(i =>
       (i, blobText, "en", "blob", blobText.length.toLong))

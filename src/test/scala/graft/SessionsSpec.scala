@@ -71,6 +71,20 @@ class SessionsSpec extends SparkSpec {
     check("src/main", "_txlog", "TxTable.scala")
   }
 
+  test("drift guard: no parquet read under src/main infers its schema with a job") {
+    // a read chain of options only, ending in .parquet( — no .schema(
+    val inferring =
+      """\.read(\s*\.(?:option|options|format)\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\(""".r
+    val bad = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.toString.endsWith("/ParquetMeta.scala"))
+      .filter { p =>
+        val code = Files.readAllLines(p).asScala
+          .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith)).mkString("\n")
+        inferring.findFirstIn(code).nonEmpty
+      }.toSeq
+    assert(bad.isEmpty, s"a parquet read without .schema( in $bad: use Tables.read")
+  }
+
   test("drift guard: each near-dup index step is written once") {
     def occurrences(root: String, literal: String): Int =
       Files.walk(Paths.get(root)).iterator().asScala.filter(_.toString.endsWith(".scala"))

@@ -1,16 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.sinks.Sinks
 
 /** R16/R22/R9 sink semantics + the DSv2 HTTP source stub contract. */
 class SinkSourceSpec extends SparkSpec {
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_sink_").toString
+  private def tmp(): String = tempDir("graft_sink_")
 
   test("date-partitioned write lands one directory per UTC day") {
     val out = tmp()
@@ -45,6 +45,81 @@ class SinkSourceSpec extends SparkSpec {
       (df, d) => df.limit(10).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(d))
     assert(expected == 25 && !deleted)
     assert(new java.io.File(src).exists()) // keep-on-mismatch
+  }
+
+  /** Every file and directory under `root` (hidden ones too), by path
+    * relative to it. */
+  private def listing(root: String): Seq[String] = {
+    val base = java.nio.file.Paths.get(root)
+    scala.util.Using.resource(java.nio.file.Files.walk(base))(
+      _.iterator().asScala.map(base.relativize(_).toString).toSeq.sorted)
+  }
+
+  test("table resolution reads a footer: a fresh path starts no Spark job") {
+    val d = tmp()
+    Tables.region(spark, sfDir).write.parquet(s"$d/region.parquet")
+    assert(SparkSpec.jobsOf(Tables.table(spark, d, "region")) == 0)
+    assert(Tables.table(spark, d, "region").count() == 5)
+  }
+
+  test("footer schema and row count equal Spark's on every sf0.001 table and a dated sink") {
+    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "documents", "embeddings", "events")) {
+      val p = s"$sfDir/$t.parquet"
+      assert(Tables.read(spark, p).schema == spark.read.parquet(p).schema, t)
+      assert(ParquetMeta.rowCount(spark, p) == spark.read.parquet(p).count(), t)
+    }
+    val out = tmp()
+    Sinks.writeDatePartitioned(Tables.events(spark, sfDir).limit(300), out)
+    val viaFooter = Tables.read(spark, out)
+    assert(viaFooter.schema == spark.read.parquet(out).schema)
+    assert(viaFooter.schema("date_part").dataType == IntegerType)
+    assert(ParquetMeta.rowCount(spark, out) == 300 && viaFooter.count() == 300)
+  }
+
+  test("moveVerified counts from footers: the copy is its only job") {
+    val src = tmp() + "/src"
+    val dst = tmp() + "/dst"
+    Tables.region(spark, sfDir).write.parquet(src)
+    Tables.region(spark, sfDir).write.parquet(dst) // the before-count is read too
+    var moved = (0L, false)
+    assert(SparkSpec.jobsOf { moved = Sinks.moveVerified(spark, src, dst) } <= 1)
+    assert(moved == ((5L, true)))
+    assert(spark.read.parquet(dst).count() == 10)
+  }
+
+  test("appendNew into an existing flat sink writes once under an observed count") {
+    val out = tmp() + "/sink"
+    val region = Tables.region(spark, sfDir)
+    region.filter(col("r_regionkey") < 2).write.parquet(out)
+    var n = 0L
+    assert(SparkSpec.jobsOf { n = Sinks.appendNew(spark, region, "r_regionkey", out) } <= 3)
+    assert(n == 3)
+    assert(spark.read.parquet(out).count() == 5)
+  }
+
+  test("a zero-row append leaves the sink's files and directories as it found them") {
+    val region = Tables.region(spark, sfDir)
+    val flat = tmp() + "/flat"
+    assert(Sinks.appendNew(spark, region, "r_regionkey", flat) == 5)
+    val flatBefore = listing(flat)
+    assert(Sinks.appendNew(spark, region, "r_regionkey", flat) == 0)
+    assert(listing(flat) == flatBefore)
+    val events = Tables.events(spark, sfDir).limit(40).cache()
+    val dated = tmp() + "/dated"
+    Sinks.writeDatePartitioned(events, dated)
+    val datedBefore = listing(dated)
+    assert(Sinks.appendNew(spark, events, "event_id", dated) == 0)
+    assert(listing(dated) == datedBefore)
+    events.unpersist()
+    // nothing to append into a sink that does not exist: none is made
+    val missing = tmp() + "/missing"
+    assert(Sinks.appendNew(spark, region.limit(0), "r_regionkey", missing) == 0)
+    assert(!new java.io.File(missing).exists())
+    // nor any of its missing parents
+    val parent = tmp()
+    assert(Sinks.appendNew(spark, region.limit(0), "r_regionkey", parent + "/new/a/b") == 0)
+    assert(listing(parent) == Seq(""))
   }
 
   test("idempotent append: second run with same keys writes nothing") {
@@ -303,7 +378,7 @@ class SinkSourceSpec extends SparkSpec {
   }
 
   test("compaction collapses small files, preserves content exactly, and swaps atomically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     // simulate a microbatch-accreted sink: 16 tiny files
     Tables.nation(spark, sfDir).repartition(16)
       .write.parquet(dir)
@@ -320,7 +395,7 @@ class SinkSourceSpec extends SparkSpec {
   test("schema evolution: mergeSchema unions columns across generations, old rows null-fill") {
     // generation 1 lands (doc_id, lang); generation 2 adds quality_score
     // — the additive-column evolution a long-lived corpus goes through
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = tempDir("graft_evolve") + "/t"
     val docs = Tables.documents(spark, sfDir)
     docs.select("doc_id", "lang").limit(10).write.parquet(dir)
     docs.select(col("doc_id"), col("lang"), (length(col("text")) % 100).as("quality_score"))

@@ -11,14 +11,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temporary directory, deleted with everything under it
+    * once the suite has run. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => SparkSpec.deleteRecursively(d))
+    finally super.afterAll()
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = Sessions.build(4, "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh_").toFile
+    sys.addShutdownHook(deleteRecursively(warehouse))
+    val s = Sessions.build(4, "spark.sql.warehouse.dir" -> warehouse.toString)
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
   }
 
   /** Runs `body` and returns the number of Spark jobs it started. The

@@ -147,7 +147,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, Long, Long, Option[Array[Byte]])]
     val out = Streams.ingestPipeline(
       input.toDF().toDF("ts", "event_id", "station_id", "content"), stations)
-    val sink = java.nio.file.Files.createTempDirectory("graft_ingest_").toString
+    val sink = tempDir("graft_ingest_")
     val q = out.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         graft.sinks.Sinks.writeDatePartitioned(batch, sink)

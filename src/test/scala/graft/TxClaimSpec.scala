@@ -15,8 +15,8 @@ import graft.sinks.{Claims, ConditionalPutClaim, ConditionalStore, LocalConditio
 class TxClaimSpec extends SparkSpec {
 
   private def freshTable(scheme: String, tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_claim_${tag}_")
-    Files.delete(d)
+    val d = tempDir(s"graft_claim_${tag}_")
+    Files.delete(Paths.get(d))
     s"$scheme://$d"
   }
 
@@ -171,7 +171,7 @@ class TxClaimSpec extends SparkSpec {
   }
 
   test("vacuum after manifest cleanup: data whose only reference is a checkpoint is NEVER reclaimed") {
-    val t = Files.createTempDirectory("graft_claim_vac_").toString
+    val t = tempDir("graft_claim_vac_")
     new java.io.File(t).delete()
     (0 until 12).foreach(i => TxTable.append(frame(i * 10 until (i + 1) * 10), t))
     // manifests at-or-below the auto-checkpoint (version 9) cleaned away
@@ -187,7 +187,7 @@ class TxClaimSpec extends SparkSpec {
   }
 
   test("commitOnce + replaceCompact after manifest cleanup: no version-0 re-claim, compaction works off the checkpoint head") {
-    val t = Files.createTempDirectory("graft_claim_head_").toString
+    val t = tempDir("graft_claim_head_")
     new java.io.File(t).delete()
     (0 until 12).foreach(i => TxTable.append(frame(i * 10 until (i + 1) * 10), t))
     (0 to 9).foreach(v => Files.delete(Paths.get(s"$t/_txlog/${"%020d".format(v)}.txn")))

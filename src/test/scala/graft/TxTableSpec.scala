@@ -14,7 +14,7 @@ import graft.sinks.{Claims, PosixLinkClaim, TxTable}
 class TxTableSpec extends SparkSpec {
 
   private def freshTable(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_tx_${tag}_").toString
+    val d = tempDir(s"graft_tx_${tag}_")
     new java.io.File(d).delete() // TxTable creates its own layout
     d
   }
@@ -236,8 +236,8 @@ class TxTableSpec extends SparkSpec {
     // torn manifest impossible by protocol, so append skips the scan):
     // backdated stall + plain append over mock:// (HDFS-like default)
     spark.sparkContext.hadoopConfiguration.set("fs.mock.impl", classOf[MockFs].getName)
-    val local = Files.createTempDirectory("graft_tx_autofence_")
-    Files.delete(local)
+    val local = tempDir("graft_tx_autofence_")
+    Files.delete(Paths.get(local))
     val tm = s"mock://$local"
     TxTable.append(frame(0 until 10), tm)
     val stalled2 = Paths.get(s"$local/_txlog/${"%020d".format(1)}.txn")
@@ -433,8 +433,8 @@ class TxTableSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.set("fs.mock.impl", classOf[MockFs].getName)
     Claims.register("mock", PosixLinkClaim)
     try {
-      val local = Files.createTempDirectory("graft_tx_listings_")
-      Files.delete(local)
+      val local = tempDir("graft_tx_listings_")
+      Files.delete(Paths.get(local))
       val t = s"mock://$local"
       (0 until 3).foreach(i => TxTable.append(frame(i * 100 until (i + 1) * 100).coalesce(1), t))
       def listings(op: => Any): Int = { MockFs.reset(); op; MockFs.txlogListings.get }
